@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kgraph_spark.config import PROV_PREFIX
+from kgraph_spark.session import local_frame
 
 
 def is_authoritative_col(c: Column) -> Column:
@@ -90,7 +91,10 @@ def connected_components(edges: DataFrame, max_iterations: int = 20) -> DataFram
 
 def _merge_mapping_local(edge_rows, spark) -> DataFrame:
     """Driver-side union-find for small edge sets (the common case: merge
-    clusters are tiny relative to the corpus). Same winner rule."""
+    clusters are tiny relative to the corpus). Same winner rule. The map is
+    returned as a JVM local relation (session.local_frame) — zero edges give
+    an empty (entity_id, final_id) frame — so the broadcasts in apply_merge
+    start no Python worker."""
     from kgraph_spark.config import is_authoritative_id
 
     parent: dict[str, str] = {}
@@ -114,10 +118,7 @@ def _merge_mapping_local(edge_rows, spark) -> DataFrame:
     for members in comps.values():
         winner = min(members, key=lambda x: (not is_authoritative_id(x), x))
         rows.extend((m, winner) for m in members if m != winner)
-    schema = "entity_id string, final_id string"
-    if not rows:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, "entity_id string, final_id string")
 
 
 def merge_mapping(

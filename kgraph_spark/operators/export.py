@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from kgraph_spark.config import PromotionConfig
 from kgraph_spark.operators.canonicalize import is_authoritative_col
+from kgraph_spark.session import local_frame
 
 
 def entities_table(
@@ -338,8 +339,8 @@ def stage_metrics(df: DataFrame, stage: str, group_col: str | None = None) -> Da
         return df.groupBy(F.col(group_col).alias("group_key")).agg(
             F.count("*").alias("n")
         ).withColumn("stage", F.lit(stage))
-    return df.sparkSession.createDataFrame(
-        [(stage, None, df.count())], "stage string, group_key string, n long"
+    return local_frame(
+        df.sparkSession, [(stage, None, df.count())], "stage string, group_key string, n long"
     ).select("group_key", "n", "stage")
 
 

@@ -36,7 +36,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -52,6 +51,7 @@ from kgraph_spark.functions.medlit_schema import (
     SYMMETRIC_PREDICATES,
 )
 from kgraph_spark.operators.canonicalize import is_authoritative_col
+from kgraph_spark.session import local_frame
 
 _ORD = ("paper_id", "pos")  # deterministic processing order (see medlit_bundles)
 
@@ -130,7 +130,7 @@ def synonym_cache_table(spark: SparkSession, cache_path: str) -> DataFrame:
                     if k not in rows and s.get("canonical_id"):
                         rows[k] = s["canonical_id"]
     data = [(k, c, v) for (k, c), v in rows.items()]
-    return spark.createDataFrame(data, "name_key string, entity_class string, cache_cid string")
+    return local_frame(spark, data, "name_key string, entity_class string, cache_cid string")
 
 
 _FOLD_SCHEMA = T.StructType(
@@ -154,48 +154,50 @@ def assign_merge_keys(entities_with_cache: DataFrame) -> DataFrame:
     (dedup.py:316-360): raw-lower name hit > spelling-normalized hit >
     bundle authoritative id > synonym cache > new provisional slug; only
     the last three populate the index with the entity's name AND synonyms.
+    The fold uses the grouped-map contract (one pandas frame per class): the
+    iterator form would hand it one Arrow batch at a time, resetting the
+    index at every maxRecordsPerBatch rows.
 
     Returns union-shaped rows: row_type 'assign' ((paper, local) -> cid)
     and 'index' (final name_key -> cid state, used by the free-form name
     fallback during triple accumulation)."""
 
-    def fold(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["paper_id", "pos"], kind="mergesort")
-            idx: dict[str, str] = {}
-            out: list[tuple[str, str, str, str | None, str]] = []
-            ec = pdf["entity_class"].iloc[0] if len(pdf) else None
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(["paper_id", "pos"], kind="mergesort")
+        idx: dict[str, str] = {}
+        out: list[tuple[str, str, str, str | None, str]] = []
+        ec = pdf["entity_class"].iloc[0] if len(pdf) else None
 
-            def populate(cid: str, n: str) -> None:
-                k = n.lower().strip()
-                if k:
-                    idx[k] = cid
-                nn = _dedup_norm(n)
-                if nn and nn != k:
-                    idx[nn] = cid
+        def populate(cid: str, n: str) -> None:
+            k = n.lower().strip()
+            if k:
+                idx[k] = cid
+            nn = _dedup_norm(n)
+            if nn and nn != k:
+                idx[nn] = cid
 
-            for row in pdf.itertuples(index=False):
-                name = row.name or ""
-                # raw-lower key is NOT stripped on lookup (dedup.py:316)
-                cid = idx.get(name.lower())
-                if cid is None:
-                    cid = idx.get(_dedup_norm(name))
-                if cid is None:
-                    syns = row.synonyms if row.synonyms is not None else []
-                    names = {name} | set(syns)
-                    if row.auth_id:
-                        cid = row.auth_id
-                    elif row.cache_cid:
-                        cid = row.cache_cid
-                    else:
-                        cid = "prov-" + hashlib.sha256(
-                            f"{row.paper_id}\x00{row.local_id}".encode()
-                        ).hexdigest()[:12]
-                    for n in names:
-                        populate(cid, n)
-                out.append((ec, "assign", row.paper_id, row.local_id, cid))
-            out.extend((ec, "index", k, None, v) for k, v in idx.items())
-            yield pd.DataFrame(out, columns=["entity_class", "row_type", "a", "b", "cid"])
+        for row in pdf.itertuples(index=False):
+            name = row.name or ""
+            # raw-lower key is NOT stripped on lookup (dedup.py:316)
+            cid = idx.get(name.lower())
+            if cid is None:
+                cid = idx.get(_dedup_norm(name))
+            if cid is None:
+                syns = row.synonyms if row.synonyms is not None else []
+                names = {name} | set(syns)
+                if row.auth_id:
+                    cid = row.auth_id
+                elif row.cache_cid:
+                    cid = row.cache_cid
+                else:
+                    cid = "prov-" + hashlib.sha256(
+                        f"{row.paper_id}\x00{row.local_id}".encode()
+                    ).hexdigest()[:12]
+                for n in names:
+                    populate(cid, n)
+            out.append((ec, "assign", row.paper_id, row.local_id, cid))
+        out.extend((ec, "index", k, None, v) for k, v in idx.items())
+        return pd.DataFrame(out, columns=["entity_class", "row_type", "a", "b", "cid"])
 
     return entities_with_cache.select(
         "paper_id", "pos", "local_id", "entity_class", "name", "synonyms", "auth_id", "cache_cid"
@@ -261,9 +263,7 @@ def same_as_ordered_mapping(edges: DataFrame, local_threshold: int = 200_000) ->
             (r["src"], r["dst"])
             for r in sorted(head, key=lambda r: (r["paper_id"], r["pos"]))
         ]
-        out = _replay_same_as(rows)
-        schema = "entity_id string, final_id string"
-        return spark.createDataFrame(out, schema) if out else spark.createDataFrame([], schema)
+        return local_frame(spark, _replay_same_as(rows), "entity_id string, final_id string")
 
     from kgraph_spark.operators.canonicalize import connected_components
 
@@ -271,11 +271,10 @@ def same_as_ordered_mapping(edges: DataFrame, local_threshold: int = 200_000) ->
     comp = labels.withColumnRenamed("id", "src").withColumnRenamed("component", "comp")
     tagged = edges.join(comp, "src")
 
-    def fold(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["paper_id", "pos"], kind="mergesort")
-            out = _replay_same_as(list(zip(pdf["src"], pdf["dst"])))
-            yield pd.DataFrame(out, columns=["entity_id", "final_id"])
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(["paper_id", "pos"], kind="mergesort")
+        out = _replay_same_as(list(zip(pdf["src"], pdf["dst"])))
+        return pd.DataFrame(out, columns=["entity_id", "final_id"])
 
     return tagged.groupBy("comp").applyInPandas(
         fold, schema="entity_id string, final_id string"
@@ -328,8 +327,8 @@ def _constraints_df(spark: SparkSession) -> DataFrame:
     rows = [
         (p, list(subs), list(objs)) for p, (subs, objs) in PREDICATE_CONSTRAINTS.items()
     ]
-    return spark.createDataFrame(
-        rows, "pred_lower string, subj_types array<string>, obj_types array<string>"
+    return local_frame(
+        spark, rows, "pred_lower string, subj_types array<string>, obj_types array<string>"
     )
 
 
@@ -458,8 +457,8 @@ def accumulate_triples(
     # id lookup, so a rel citing another paper's evidence id yields a NULL
     # sentence exactly as the reference's bundle-local ev_by_id does
     if evidence is None:
-        evidence = j.sparkSession.createDataFrame(
-            [], "paper_id string, evidence_id string, text string"
+        evidence = local_frame(
+            j.sparkSession, [], "paper_id string, evidence_id string, text string"
         )
     ex = j.select(
         "subject", "predicate", "object", "paper_id", "pos", "sp",

@@ -21,12 +21,13 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kgraph_spark.config import PREDICATE_SPECS, PipelineConfig
+from kgraph_spark.session import local_frame
 
 
 def predicate_spec_df(spark: SparkSession) -> DataFrame:
     from kgraph_spark.schemas import PREDICATE_SPEC
 
-    return spark.createDataFrame(PREDICATE_SPECS, schema=PREDICATE_SPEC)
+    return local_frame(spark, PREDICATE_SPECS, PREDICATE_SPEC)
 
 
 def validate_relations(resolved: DataFrame, spec: DataFrame) -> DataFrame:

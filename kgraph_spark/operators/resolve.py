@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from kgraph_spark.config import PROV_PREFIX
 from kgraph_spark.functions.normalize import norm_dedup_col
+from kgraph_spark.session import local_frame
 
 
 def prov_id_col(name_col, type_col):
@@ -40,8 +41,9 @@ def alias_index_df(spark: SparkSession, gazetteer_rows: list[tuple]) -> DataFram
 
     Built driver-side: the gazetteer is a dimension that is local by
     construction, so deduplicating it in Python avoids a shuffle + window
-    stage in every pipeline run. The provisional-id hash matches
-    prov_id_col/golden.prov_id exactly."""
+    stage in every pipeline run. The result is a JVM local relation
+    (session.local_frame), so broadcasting it starts no Python worker. The
+    provisional-id hash matches prov_id_col/golden.prov_id exactly."""
     import hashlib
 
     from kgraph_spark.config import PROV_PREFIX
@@ -58,8 +60,8 @@ def alias_index_df(spark: SparkSession, gazetteer_rows: list[tuple]) -> DataFram
             PROV_PREFIX + hashlib.sha256(f"{norm_dedup_py(alias)}|{etype}".encode()).hexdigest()[:12]
         )
         best[key] = (key, eid, etype)
-    return spark.createDataFrame(
-        list(best.values()), "norm_key string, entity_id string, entity_type string"
+    return local_frame(
+        spark, best.values(), "norm_key string, entity_id string, entity_type string"
     )
 
 

@@ -13,6 +13,12 @@
 
 The per-document stages all co-partition on doc_id; the only global shuffle
 is the final triple accumulation (plus the tiny CC loop over merge edges).
+
+Extraction is the only layer that runs Python. The driver-built dimensions
+(alias index, predicate spec, SAME_AS merge map) are JVM local relations
+(session.local_frame), so resolution, canonicalization, validation and
+accumulation are plain broadcast joins and aggregates that start no Python
+worker.
 """
 
 from __future__ import annotations

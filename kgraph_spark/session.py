@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -55,6 +56,27 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: str | T.StructType) -> DataFrame:
+    """Driver-built rows → DataFrame backed by a JVM LocalRelation.
+
+    `spark.createDataFrame(list, schema)` parallelizes pickled rows into a
+    Python RDD (plan node `Scan ExistingRDD`), so every job that reads the
+    frame — each broadcast of a dimension table, for one — forks Python
+    workers to unpickle it. Handing Spark a pyarrow Table instead yields a
+    `LocalTableScan`: the rows live in the plan and no Python worker ever
+    touches them. `schema` is a DDL string or a StructType (its nullability
+    is kept); rows are tuples in schema order, and zero rows is valid."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 def stop_spark() -> None:
