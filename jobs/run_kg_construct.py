@@ -34,7 +34,9 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.appName("kg_construct").getOrCreate()
+    from kgraph_spark.session import SESSION_CONF
+
+    spark = SparkSession.builder.appName("kg_construct").config(map=SESSION_CONF).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     from kgraph_spark import synth

@@ -29,7 +29,9 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.appName("medlit_pass2").getOrCreate()
+    from kgraph_spark.session import SESSION_CONF
+
+    spark = SparkSession.builder.appName("medlit_pass2").config(map=SESSION_CONF).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     from kgraph_spark.operators.medlit_pass2 import run_pass2

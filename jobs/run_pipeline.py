@@ -16,8 +16,9 @@ This is the deployment surface the design targets (BASELINE north rule:
 The script deliberately sets NO master and no local-mode memory tuning:
 spark-submit owns cluster choice and sizing (local[*] / YARN / k8s), and
 the package reaches the driver and every Python worker through --py-files
-— no repo checkout on the cluster. The session factory's AQE / Arrow /
-broadcast settings are applied as session confs (safe post-submit).
+— no repo checkout on the cluster. The session carries
+`session.SESSION_CONF` (AQE / Arrow / time zone / broadcast threshold /
+generated-code cache size), the settings `get_spark` applies too.
 
 Modes:
   * default        — one-shot: run_pipeline + write_bundle(--output).
@@ -49,19 +50,9 @@ import time
 def build_session(app_name: str, shuffle_partitions: int | None):
     from pyspark.sql import SparkSession
 
-    builder = SparkSession.builder.appName(app_name)
-    # session-level (non-cluster) settings only; master/memory/executors
-    # belong to spark-submit
-    for k, v in {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    }.items():
-        builder = builder.config(k, v)
+    from kgraph_spark.session import SESSION_CONF
+
+    builder = SparkSession.builder.appName(app_name).config(map=SESSION_CONF)
     if shuffle_partitions:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     return builder.getOrCreate()

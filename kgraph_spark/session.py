@@ -14,17 +14,69 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
+# Generated-code cache size (static conf: only read when the JVM's code
+# generator first loads). One pass of the graph layers (resolve → canonicalize
+# → validate → co-occurrence → accumulate → export) compiles 130-135 distinct
+# classes, measured at local[2] with AQE off: 14 in plan build and the
+# merge-map collect, 36 in the entities write, 74 in relationships, 7 in
+# evidence, 3 in mentions. Spark's default of 100 cannot hold one pass, so a
+# warm rerun recompiled 85-100 of them (101-122 at local[8]) and the JIT
+# compiled the new bytecode again. Guava splits this cache into segments that
+# evict independently, each at its share of the cap, so an unevenly hashed
+# segment can evict before the whole cache is full; 1,000 leaves that
+# headroom and holds the other queries of a long session too.
+CODEGEN_CACHE_ENTRIES = 1000
+
+# Settings that are safe on any cluster: SQL planning and execution only, no
+# master, memory or executor counts (spark-submit owns those). get_spark and
+# the spark-submit jobs under jobs/ both apply exactly these.
+SESSION_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    "spark.sql.session.timeZone": "UTC",
+    # broadcast threshold: KB dict / constraint dims are ≤ few MB
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+}
+
+
+def driver_memory(meminfo: str) -> str:
+    """Default spark.driver.memory from /proc/meminfo text: half of
+    MemAvailable, rounded down to 256 MB, never below 1 GB (also the result
+    when MemAvailable is missing). A local-mode driver is the whole Spark
+    process, so a fixed large default lets the JVM grow past the machine's
+    RAM until the kernel kills it."""
+    avail_kb = next(
+        (int(line.split()[1]) for line in meminfo.splitlines() if line.startswith("MemAvailable:")),
+        0,
+    )
+    mb = avail_kb // 1024 // 2 // 256 * 256
+    return f"{max(1024, mb)}m"
+
+
+def _default_driver_memory() -> str:
+    try:
+        with open("/proc/meminfo") as f:
+            return driver_memory(f.read())
+    except OSError:
+        return driver_memory("")
+
+
 def get_spark(
     app_name: str = "kgraph_spark",
     parallelism: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession.
+    """Build (or reuse) a local-mode SparkSession with SESSION_CONF.
 
     parallelism: local[] thread count; defaults to $SPARK_GRAFT_CPUS or 32.
     shuffle_partitions: defaults to parallelism (local mode: one shuffle
     partition per core avoids tiny-task overhead; AQE coalesces further).
+    Driver memory is $SPARK_DRIVER_MEM, else driver_memory() of this machine.
     """
     cpus = parallelism or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sp = shuffle_partitions or cpus
@@ -38,18 +90,11 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
+        .config(map=SESSION_CONF)
         .config("spark.sql.shuffle.partitions", str(sp))
         .config("spark.default.parallelism", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
-        # broadcast threshold: KB dict / constraint dims are ≤ few MB
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
