@@ -159,7 +159,7 @@ def kg_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs_to_span_documents(_read(spark, sf_dir, "documents"))
     gaz = [(w, None, "term", 1.0) for w in KG_TERMS]
-    res = run_pipeline(spark, docs, gaz, persist_intermediates=True)
+    res = run_pipeline(spark, docs, gaz)
     return res.triples.select(
         "subject_id", "predicate", "object_id",
         F.round("confidence", 6).alias("confidence"),

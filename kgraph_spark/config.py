@@ -52,19 +52,6 @@ class PipelineConfig:
     # mentions table is the full-provenance record.
     max_supporting_documents: int = 10_000
     max_synonyms: int = 1_000
-    # co-occurrence branch: fused F1+F10 with the pair stream
-    # dictionary-encoded as 8-byte codes (cooccurrence_accumulated) vs the
-    # per-doc string-pair path unioned into the shared accumulate
-    cooc_dict_encode: bool = True
-    # F4/F5 guard rails (validation_extra): evidence containment + predicate
-    # polarity, applied to raw relations BEFORE endpoint resolution. Off by
-    # default — the deterministic extractor guarantees containment by
-    # construction (parity-neutral when on); the seam exists for sloppier
-    # plug-in extractors (LLM/C2). semantic_evidence_threshold switches the
-    # containment check to the reference's embedding-cosine fallback
-    # (relationships.py:142-206, threshold 0.5 at :225).
-    evidence_validation: bool = False
-    semantic_evidence_threshold: float | None = None
     # two-phase salted (s,p,o) accumulation: bounds the per-reducer
     # collect_set state for hot pairs to O(max_source_documents) per salt
     # (relationships.accumulate_triples_salted — output equivalence-tested

@@ -113,12 +113,13 @@ def synonym_cache_table(spark: SparkSession, cache_path: str) -> DataFrame:
     Replays lookup_entity's entry-order semantics offline (reference
     kgraph/pipeline/synonym_cache.py:32-57): per normalized name key, the
     FIRST entry with resolution=merged and confidence>=0.85 whose entity_a
-    or entity_b side matches (name, class) decides the canonical id. The
-    cache is a ~6k-row dimension file, so the replay is a driver-side
+    or entity_b side matches (name, class) decides the canonical id — even
+    when that id is empty, which is a miss that no later entry overrides.
+    The cache is a ~6k-row dimension file, so the replay is a driver-side
     precompute and the result joins broadcast."""
     with open(cache_path, encoding="utf-8") as f:
         cache = json.load(f)
-    rows: dict[tuple[str, str], str] = {}
+    first: dict[tuple[str, str], str | None] = {}
     for key, entries in cache.items():
         for entry in entries:
             if entry.get("resolution") != "merged" or entry.get("confidence", 0) < 0.85:
@@ -126,10 +127,8 @@ def synonym_cache_table(spark: SparkSession, cache_path: str) -> DataFrame:
             for side in ("entity_a", "entity_b"):
                 s = entry.get(side) or {}
                 if s.get("name", "").lower() == key and s.get("class"):
-                    k = (key, s["class"])
-                    if k not in rows and s.get("canonical_id"):
-                        rows[k] = s["canonical_id"]
-    data = [(k, c, v) for (k, c), v in rows.items()]
+                    first.setdefault((key, s["class"]), s.get("canonical_id"))
+    data = [(k, c, v) for (k, c), v in first.items() if v]
     return local_frame(spark, data, "name_key string, entity_class string, cache_cid string")
 
 
@@ -357,7 +356,7 @@ def accumulate_triples(
     candidate wins, else a unique authoritative candidate (dedup.py:447-470).
     Confidence/linguistic_trust accumulate with the reference's running-max
     fold (trust replaced only on a STRICT confidence improvement carrying a
-    non-null trust), restated as a higher-order aggregate over the
+    non-empty trust), restated as a higher-order aggregate over the
     order-sorted group — one shuffle, no Python."""
     live = rels.filter(
         ~((F.col("predicate") == SAME_AS) & (F.col("confidence") >= SAME_AS_MIN_CONFIDENCE))
@@ -528,11 +527,15 @@ def accumulate_triples(
             ),
         )
         upd = x.confidence > acc.conf
+        # the group's first row (conf still the -1 sentinel) sets trust
+        # verbatim; a later one replaces it only with a non-empty trust
+        # (the reference's truthiness test: '' counts as absent)
+        new_trust = (acc.conf < 0) | (F.length(x.linguistic_trust) > 0)
         return F.struct(
             eids2.alias("eids"),
             prov2.alias("prov"),
             F.when(upd, x.confidence).otherwise(acc.conf).alias("conf"),
-            F.when(upd, F.coalesce(x.linguistic_trust, acc.trust)).otherwise(acc.trust).alias("trust"),
+            F.when(upd & new_trust, x.linguistic_trust).otherwise(acc.trust).alias("trust"),
         )
 
     folded = F.aggregate("xs", init, step)

@@ -1054,7 +1054,7 @@ def transe_plausibility(
     top-k rows (subject_id, predicate, object_id, implausibility),
     ordered (score desc, s, p, o). Entity/relation vectors are sha256
     hex digits mapped through ascii()%16 — a pluggable stand-in for
-    trained KG embeddings (the interfaces.py determinism note): the
+    trained KG embeddings: the
     SCORING dataflow (per-dim arithmetic, exact integer squared sum,
     one sqrt, total-ordered top-k) is the real, scale-shaped part, and
     any learned embedding table drops in as a broadcast join.

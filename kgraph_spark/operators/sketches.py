@@ -12,10 +12,9 @@ engine-portable hash), so the sketch — and every estimate — is
 bit-identical across engines, runs, and partitionings: the oracle
 recomputes the exact same sketch in SQL.
 
-This module keeps the batch form; the streaming twin is the same
-groupBy((row, bucket)).sum over an incremental batch unioned cell-wise
-onto the persisted sketch (the Bloom-digest pattern streaming/dedup.py
-already establishes)."""
+This module keeps the batch form; an incremental update is the same
+groupBy((row, bucket)).sum over a new batch unioned cell-wise onto the
+persisted sketch."""
 
 from __future__ import annotations
 
@@ -128,9 +127,9 @@ def hll_sketch(df: DataFrame, key_col: str, p: int = 8) -> DataFrame:
 
 def merge_hll(base: DataFrame, delta: DataFrame) -> DataFrame:
     """Register-wise MAX union of two HLL sketches built with the same p —
-    the streaming/incremental twin (the merge_cms pattern): a stream
-    folds each micro-batch's sketch onto the persisted one; the result is
-    bit-equal to the one-shot sketch over the unioned input."""
+    the incremental form: fold each new batch's sketch onto the persisted
+    one; the result is bit-equal to the one-shot sketch over the unioned
+    input."""
     return (
         base.unionByName(delta)
         .groupBy("register")

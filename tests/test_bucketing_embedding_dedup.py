@@ -1,28 +1,5 @@
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from kgraph_spark import synth
-from kgraph_spark.pipeline import run_pipeline_from_extracted
-from kgraph_spark.operators.mentions import extract_all
-
-
-def test_embedding_dedup_is_parity_neutral_with_hash_embeddings(spark):
-    """With identity (hash) embeddings, D10 merges only identical normalized
-    surfaces — already merged by the alias index — so enabling the stage
-    must not change the triple set (the seam itself is exercised)."""
-    docs = synth.documents_df(spark, 120)
-    gaz = synth.gazetteer_rows()
-    gb = spark.sparkContext.broadcast(gaz)
-    extracted = extract_all(docs, gb).persist()
-    base = run_pipeline_from_extracted(spark, extracted, gaz, persist_intermediates=False)
-    with_dedup = run_pipeline_from_extracted(
-        spark, extracted, gaz, persist_intermediates=False, embedding_dedup=True
-    )
-    k = lambda df: {(r["subject_id"], r["predicate"], r["object_id"]) for r in df.collect()}
-    assert k(base.triples) == k(with_dedup.triples)
-    extracted.unpersist()
-
 
 def test_bucketed_triples_roundtrip_and_lookup(spark, tmp_path):
     from kgraph_spark.operators.export import write_bucketed_triples
@@ -44,17 +21,12 @@ def test_bucketed_triples_roundtrip_and_lookup(spark, tmp_path):
 
 
 def test_no_cross_join_in_any_embedding_pairing_plan(spark):
-    """D10/D11 plans must never contain an unblocked OR class-only pairing:
-    every similarity self-join is keyed on an LSH bucket (classes grow with
+    """The similarity pairing must never be unblocked OR class-only: the
+    self-join is keyed on an LSH bucket (classes grow with
     the corpus, buckets are bounded by similarity structure), so the
     physical plan has no CartesianProduct / BroadcastNestedLoopJoin and
     every equi-join key set includes the bucket column
     (the reference's own O(n²) warning, kgraph/ingest.py:877-880)."""
-    from kgraph_spark.operators.embedding_resolve import (
-        cross_type_candidates,
-        merge_candidates,
-        provisional_merge_edges,
-    )
     from kgraph_spark.operators.similarity import blocked_pair_similarity
 
     v = [float(i) for i in range(8)]
@@ -64,16 +36,10 @@ def test_no_cross_join_in_any_embedding_pairing_plan(spark):
          ("RxNorm:1", "drug", "canonical", v)],
         "entity_id string, entity_type string, status string, embedding array<float>",
     )
-    for df in (
-        provisional_merge_edges(ents),
-        cross_type_candidates(ents, dim=8),
-        merge_candidates(ents),
-        blocked_pair_similarity(ents, 0.9),
-    ):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan, plan
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-        assert "bucket#" in plan, plan  # the pairing join is LSH-bucket keyed
+    plan = blocked_pair_similarity(ents, 0.9)._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "bucket#" in plan, plan  # the pairing join is LSH-bucket keyed
 
 
 def test_banded_lsh_pairing_recall_at_088(spark):
@@ -116,22 +82,3 @@ def test_banded_lsh_pairing_recall_at_088(spark):
     found = expected & got
     assert len(expected) >= 20  # the fixture actually planted pairs
     assert len(found) / len(expected) >= 0.9, (len(found), len(expected))
-
-
-def test_cross_type_blocked_still_finds_near_parallel_pairs(spark):
-    """LSH blocking keeps the semantics: near-identical vectors of different
-    classes land in the same bucket and are flagged at >= 0.90."""
-    from kgraph_spark.operators.embedding_resolve import cross_type_candidates
-
-    v1 = [1.0, 0.5, 0.25, 0.1]
-    v2 = [1.0, 0.5, 0.25, 0.100001]   # cosine ~ 1.0
-    far = [-1.0, 0.4, -0.3, 0.9]
-    ents = spark.createDataFrame(
-        [("prov-a", "drug", "provisional", v1),
-         ("prov-c", "disease", "provisional", v2),
-         ("prov-z", "gene", "provisional", far)],
-        "entity_id string, entity_type string, status string, embedding array<float>",
-    )
-    got = {(r["id_a"], r["id_b"]) for r in cross_type_candidates(ents, dim=4).collect()}
-    assert ("prov-a", "prov-c") in got
-    assert all("prov-z" not in pair for pair in got)

@@ -40,28 +40,48 @@ def test_join_and_fast_cooccurrence_agree(spark):
 
 
 def test_dict_encoded_pipeline_equals_string_pipeline(spark):
-    """The dictionary-encoded co-occurrence branch (fused F1+F10, 8-byte
-    codes through the accumulate shuffle) and the per-doc string-pair path
-    produce identical final triple tables."""
-    from kgraph_spark import synth
-    from kgraph_spark.config import PipelineConfig
-    from kgraph_spark.pipeline import run_pipeline
+    """The pipeline's co_occurs_with rows (dictionary-encoded, fused F1+F10:
+    8-byte codes through the accumulate shuffle) equal the per-doc
+    string-pair oracle built directly from the same extraction:
+    accumulate_triples(symmetric_order(cooccurrence_triples_fast(...)))."""
+    from pyspark.sql import functions as F
 
+    from kgraph_spark.operators.canonicalize import apply_merge
+    from kgraph_spark.operators.relationships import (
+        accumulate_triples,
+        predicate_spec_df,
+        symmetric_order,
+    )
+    from kgraph_spark.pipeline import run_pipeline_from_extracted
+
+    cfg = PipelineConfig()
     docs = synth.documents_df(spark, 120)
     gaz = synth.gazetteer_rows()
+    gb = spark.sparkContext.broadcast(gaz)
+    ex = extract_all(docs, gb, cfg).persist()
+    res = run_pipeline_from_extracted(spark, ex, gaz, cfg)
 
-    def rows(enc):
-        cfg = PipelineConfig(cooc_dict_encode=enc)
-        res = run_pipeline(spark, docs, gaz, cfg)
-        out = {
+    presence = apply_merge(
+        resolve.resolve_mentions(presence_from_extracted(ex), resolve.alias_index_df(spark, gaz)),
+        res.merge_mapping,
+        "entity_id",
+    )
+    oracle = accumulate_triples(
+        symmetric_order(cooccurrence_triples_fast(presence, cfg), predicate_spec_df(spark)),
+        cfg.max_source_documents,
+    )
+
+    def rows(df):
+        return {
             (
-                r["subject_id"], r["predicate"], r["object_id"],
-                round(r["confidence"], 9), tuple(r["source_documents"]),
-                r["evidence_count"],
+                r["subject_id"], r["object_id"], round(r["confidence"], 9),
+                tuple(r["source_documents"]), r["evidence_count"],
             )
-            for r in res.triples.collect()
+            for r in df.filter(F.col("predicate") == "co_occurs_with").collect()
         }
-        res.unpersist()
-        return out
 
-    assert rows(True) == rows(False)
+    got = rows(res.triples)
+    assert got == rows(oracle)
+    assert got, "expected co-occurrence triples"
+    res.unpersist()
+    ex.unpersist()

@@ -104,3 +104,26 @@ def test_entities_match(golden, result):
         assert sorted(row["supporting_documents"]) == sorted(g["docs"]), eid
         assert row["status"] == g["status"], eid
         assert row["merged_into"] == g["merged_into"], eid
+
+
+def test_unpersist_releases_only_what_the_pipeline_persisted(spark):
+    """run_pipeline_from_extracted's caller owns the extraction frame:
+    res.unpersist() must leave it cached. run_pipeline persists its own
+    extraction and hands it back, so its unpersist() releases it."""
+    from kgraph_spark.operators.mentions import extract_all
+    from kgraph_spark.pipeline import run_pipeline_from_extracted
+
+    docs = synth.documents_df(spark, 30)
+    gaz = synth.gazetteer_rows()
+    gb = spark.sparkContext.broadcast(gaz)
+    frame = extract_all(docs, gb).persist()
+    res = run_pipeline_from_extracted(spark, frame, gaz)
+    res.unpersist()
+    assert frame.is_cached
+    assert res.extracted is None
+    frame.unpersist()
+
+    own = run_pipeline(spark, docs, gaz)
+    assert own.extracted is not None and own.extracted.is_cached
+    own.unpersist()
+    assert not own.extracted.is_cached

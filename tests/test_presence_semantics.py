@@ -48,7 +48,7 @@ def _spark_pairs(spark):
         [(d["doc_id"], [(k, t, m, o) for (k, t, m, o) in d["spans"]]) for d in [_doc("d1", PARAS)]],
         "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
-    res = run_pipeline(spark, docs, GAZ, persist_intermediates=False)
+    res = run_pipeline(spark, docs, GAZ)
     rows = res.triples.filter(F.col("predicate") == "co_occurs_with").collect()
     res.unpersist()
     return {(r["subject_id"], r["object_id"]): r["confidence"] for r in rows}
@@ -119,9 +119,9 @@ def test_merged_tombstone_lookup_by_old_id(spark):
             "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
         ),
         gaz,
-        persist_intermediates=False,
     )
     rows = {r["entity_id"]: r for r in res.entities.collect()}
+    res.unpersist()
     # winner = lexicographically-smallest authoritative id (MeSH:10)
     assert rows["MeSH:10"]["status"] == "canonical"
     assert rows["MeSH:10"]["merged_into"] is None

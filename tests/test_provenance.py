@@ -51,12 +51,10 @@ def test_jsonl_bundle_byte_identical_across_runs(spark, tmp_path):
 
     outs = []
     for run in ("a", "b"):
-        res = run_pipeline(
-            spark, synth.documents_df(spark, 60), synth.gazetteer_rows(),
-            persist_intermediates=False,
-        )
+        res = run_pipeline(spark, synth.documents_df(spark, 60), synth.gazetteer_rows())
         d = tmp_path / run
         m = write_bundle_jsonl(res.tables, str(d))
+        res.unpersist()
         outs.append((d, m))
     (da, ma), (db, mb) = outs
     for name in ("entities", "relationships", "mentions", "evidence"):

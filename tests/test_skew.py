@@ -110,11 +110,9 @@ def test_pipeline_salted_accumulation_parity(spark):
     gaz = synth.gazetteer_rows()
     gb = spark.sparkContext.broadcast(gaz)
     extracted = extract_all(docs, gb).persist()
-    base = run_pipeline_from_extracted(spark, extracted, gaz, persist_intermediates=False)
+    base = run_pipeline_from_extracted(spark, extracted, gaz)
     salted = run_pipeline_from_extracted(
-        spark, extracted, gaz,
-        cfg=PipelineConfig(accumulate_n_salts=4),
-        persist_intermediates=False,
+        spark, extracted, gaz, cfg=PipelineConfig(accumulate_n_salts=4)
     )
     k = lambda df: {
         (r["subject_id"], r["predicate"], r["object_id"],
@@ -123,6 +121,8 @@ def test_pipeline_salted_accumulation_parity(spark):
         for r in df.collect()
     }
     assert k(base.triples) == k(salted.triples)
+    for res in (base, salted):
+        res.unpersist()
     extracted.unpersist()
 
 
@@ -147,21 +147,18 @@ def test_pipeline_salt_auto_selection(spark):
     small = run_pipeline_from_extracted(
         spark, extracted, gaz,
         cfg=PipelineConfig(salt_auto_min_partitions=1_000_000),
-        persist_intermediates=False,
     )
     assert "_salt" not in plan(small.triples)
     # "big" input (threshold forced to 1) → salted two-phase engages
     big = run_pipeline_from_extracted(
         spark, extracted, gaz,
         cfg=PipelineConfig(salt_auto_min_partitions=1),
-        persist_intermediates=False,
     )
     assert "_salt" in plan(big.triples)
     # forced off beats auto even above the threshold
     forced_off = run_pipeline_from_extracted(
         spark, extracted, gaz,
         cfg=PipelineConfig(accumulate_n_salts=0, salt_auto_min_partitions=1),
-        persist_intermediates=False,
     )
     assert "_salt" not in plan(forced_off.triples)
 
@@ -172,6 +169,8 @@ def test_pipeline_salt_auto_selection(spark):
         for r in df.collect()
     }
     assert k(small.triples) == k(big.triples) == k(forced_off.triples)
+    for res in (small, big, forced_off):
+        res.unpersist()
     extracted.unpersist()
 
 

@@ -78,52 +78,6 @@ def test_embed_with_cache_only_computes_misses(spark):
     assert [round(x, 6) for x in out["e2"]] == [round(x, 6) for x in hash_embedding("beta")]
 
 
-# ---- D3/D10/D11 embedding resolve/dedup ------------------------------------
-
-def _evec(seed_text):
-    return hash_embedding(seed_text)
-
-
-def test_resolve_by_embedding_top1_threshold(spark):
-    from kgraph_spark.operators.embedding_resolve import resolve_by_embedding
-
-    v = _evec("target")
-    entities = spark.createDataFrame(
-        [("E1", "drug", v), ("E2", "drug", _evec("other")), ("E3", "disease", v)],
-        "entity_id string, entity_type string, embedding array<float>",
-    )
-    mentions = spark.createDataFrame(
-        [("m1", "drug", 0.8, v)],
-        "mention_id string, entity_type string, confidence double, embedding array<float>",
-    )
-    out = resolve_by_embedding(mentions, entities).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r["entity_id"] == "E1"          # same-type block; E3 excluded
-    assert r["similarity"] > 0.999999
-    assert abs(r["confidence"] - r["similarity"] * 0.8) < 1e-9
-
-
-def test_provisional_merge_and_cross_type(spark):
-    from kgraph_spark.operators.embedding_resolve import (
-        cross_type_candidates,
-        provisional_merge_edges,
-    )
-
-    v = _evec("same")
-    ents = spark.createDataFrame(
-        [("prov-a", "drug", "provisional", v),
-         ("prov-b", "drug", "provisional", v),
-         ("prov-c", "disease", "provisional", v),
-         ("RxNorm:1", "drug", "canonical", v)],
-        "entity_id string, entity_type string, status string, embedding array<float>",
-    )
-    edges = {(r["src"], r["dst"]) for r in provisional_merge_edges(ents).collect()}
-    assert edges == {("prov-a", "prov-b")}  # same-class provisionals only
-    cross = {(r["id_a"], r["id_b"]) for r in cross_type_candidates(ents).collect()}
-    assert ("prov-a", "prov-c") in cross or ("prov-c", "prov-a") in cross
-
-
 # ---- E1–E3 promotion --------------------------------------------------------
 
 def test_promote_and_rewrite(spark):

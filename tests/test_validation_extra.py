@@ -1,10 +1,9 @@
 """Tests for the F4/F5/F13 validation extras, C6 vocab pre-pass, D9
-reconciliation, H3/H4 lookups, and the C2/F2 interface stubs."""
+reconciliation and H3/H4 lookups."""
 
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 
 from kgraph_spark.operators.canonicalize import reconcile_by_name
 from kgraph_spark.operators.validation_extra import (
@@ -135,18 +134,6 @@ def test_entity_search_alias_index(spark):
             assert "name" not in line and "synonyms" not in line, line
 
 
-def test_extractor_stubs_raise():
-    from kgraph_spark.functions.interfaces import (
-        llm_mention_extractor,
-        llm_relation_extractor,
-        local_ner_extractor,
-    )
-
-    for stub in (llm_mention_extractor, llm_relation_extractor, local_ner_extractor):
-        with pytest.raises(NotImplementedError):
-            stub("x")
-
-
 def test_evidence_containment_semantic_fallback(spark):
     """A paraphrased quote (no substring match) passes ONLY via the semantic
     path; substring rows never touch the embedding seam; unrelated quotes
@@ -204,38 +191,6 @@ def test_evidence_containment_semantic_fallback(spark):
     assert default_sem == {"r1"}
 
 
-def test_pipeline_evidence_validation_parity_neutral(spark):
-    """cfg.evidence_validation=True must not change the triple set on the
-    deterministic corpus (its quotes contain both surfaces by construction
-    — including British-spelling surfaces, which would break if containment
-    matched the spelling-normalized dedup key instead of the raw surface)."""
-    from kgraph_spark import synth
-    from kgraph_spark.config import PipelineConfig
-    from kgraph_spark.operators.mentions import extract_all
-    from kgraph_spark.pipeline import run_pipeline_from_extracted
-
-    docs = synth.documents_df(spark, 120)
-    gaz = synth.gazetteer_rows()
-    gb = spark.sparkContext.broadcast(gaz)
-    extracted = extract_all(docs, gb).persist()
-    base = run_pipeline_from_extracted(spark, extracted, gaz, persist_intermediates=False)
-    guarded = run_pipeline_from_extracted(
-        spark, extracted, gaz,
-        cfg=PipelineConfig(evidence_validation=True),
-        persist_intermediates=False,
-    )
-    semantic = run_pipeline_from_extracted(
-        spark, extracted, gaz,
-        cfg=PipelineConfig(evidence_validation=True, semantic_evidence_threshold=0.5),
-        persist_intermediates=False,
-    )
-    k = lambda df: {(r["subject_id"], r["predicate"], r["object_id"]) for r in df.collect()}
-    want = k(base.triples)
-    assert k(guarded.triples) == want
-    assert k(semantic.triples) == want
-    extracted.unpersist()
-
-
 def test_evidence_marker_disease_context_rescue(spark):
     """The marker-disease fallback (reference relationships.py:765-774):
     an indicates/disease row whose quote names the marker (semantically)
@@ -287,45 +242,3 @@ def test_evidence_marker_disease_context_rescue(spark):
     no_docs = {r["rel_id"] for r in evidence_containment_semantic_filter(
         rels, 0.5, embed_fn=toy_embed).collect()}
     assert no_docs == set()
-
-
-def test_pipeline_semantic_rescue_wiring(spark):
-    """run_pipeline(documents=...) must reach F4 rung 4 end-to-end: the
-    object's registered type comes from the broadcast alias-index lookup,
-    the content join rescues the indicates/disease relation, and the same
-    relation is dropped when no documents frame is supplied. A twin row
-    whose quote lacks a disease-context word stays dropped either way."""
-    from kgraph_spark.config import PipelineConfig
-    from kgraph_spark.functions.embeddings import letter_frequency_embedding
-    from kgraph_spark.operators.mentions import EXTRACTED_SCHEMA
-    from kgraph_spark.pipeline import run_pipeline_from_extracted
-
-    gaz = [("datta systemm", None, "biomarker", 1.0), ("zyzzyva", None, "disease", 1.0)]
-    n = None
-    # neither endpoint appears in either quote; subject letter-profile
-    # reaches both quotes (cosine 0.79), object fails (0.13/0.15) — rung 4
-    # is the only way through, and only r1's quote carries a context word
-    r1 = ("r", "d1", n, n, n, n, 0.85, n, 0, "datta systemm", "zyzzyva",
-          "indicates", "tumor staining in the main data sample latest",
-          n, n, "datta systemm", "zyzzyva", n)
-    r2 = ("r", "d1", n, n, n, n, 0.85, n, 0, "datta systemm", "zyzzyva",
-          "associated_with", "observed in the main data sample latest",
-          n, n, "datta systemm", "zyzzyva", n)
-    extracted = spark.createDataFrame([r1, r2], EXTRACTED_SCHEMA)
-    docs = spark.createDataFrame(
-        [("d1", "the long report discusses zyzzyva cases throughout")],
-        "doc_id string, content string",
-    )
-    cfg = PipelineConfig(evidence_validation=True, semantic_evidence_threshold=0.5)
-
-    preds = lambda res: {r["predicate"] for r in res.triples.collect()}
-    rescued = run_pipeline_from_extracted(
-        spark, extracted, gaz, cfg=cfg, persist_intermediates=False,
-        documents=docs, evidence_embed_fn=letter_frequency_embedding,
-    )
-    assert preds(rescued) == {"indicates"}
-    dropped = run_pipeline_from_extracted(
-        spark, extracted, gaz, cfg=cfg, persist_intermediates=False,
-        evidence_embed_fn=letter_frequency_embedding,
-    )
-    assert preds(dropped) == set()
