@@ -20,12 +20,14 @@ the package reaches the driver and every Python worker through --py-files
 `session.SESSION_CONF` (AQE / Arrow / time zone / broadcast threshold /
 generated-code cache size), the settings `get_spark` applies too.
 
-Modes:
+Modes (both write the same four-table bundle + manifest.json to --output):
   * default        — one-shot: run_pipeline + write_bundle(--output).
-  * --checkpoint-dir — resumable: sharded, committed extraction
+  * --checkpoint-dir — resumable: sharded, committed extraction, then the
+    same graph construction and bundle write
     (lineage.checkpointed_pipeline); re-running the SAME command after a
-    kill recomputes only the missing shards. Triples + lineage + stage
-    metrics land under the checkpoint dir, and the bundle under --output.
+    kill recomputes only the missing shards. The committed extraction
+    shards (`extracted/shard=<s>/`), the lineage table and the metrics
+    table land under the checkpoint dir.
 
 Input table shape (BASELINE input_hint): documents parquet with
 (doc_id, spans:array<struct<kind,text,media_ref,offset>>); --synth N
@@ -104,32 +106,25 @@ def main(argv: list[str] | None = None) -> int:
     if args.checkpoint_dir:
         from kgraph_spark.lineage import checkpointed_pipeline
 
-        triples = checkpointed_pipeline(
+        manifest = checkpointed_pipeline(
             spark,
             docs,
             gaz_rows,
             args.checkpoint_dir,
+            args.output,
             n_shards=args.shards,
             fail_after=args.fail_after_shards,
         )
-        write_bundle({"relationships": triples}, args.output)
-        out = {
-            "docs": n_docs,
-            "triples": triples.count(),
-            "entities": None,
-            "sec": round(time.time() - t0, 2),
-        }
     else:
         from kgraph_spark.pipeline import run_pipeline
 
-        result = run_pipeline(spark, docs, gaz_rows)
-        manifest = write_bundle(result.tables, args.output)
-        out = {
-            "docs": n_docs,
-            "triples": manifest["counts"].get("relationships"),
-            "entities": manifest["counts"].get("entities"),
-            "sec": round(time.time() - t0, 2),
-        }
+        manifest = write_bundle(run_pipeline(spark, docs, gaz_rows).tables, args.output)
+    out = {
+        "docs": n_docs,
+        "triples": manifest["counts"]["relationships"],
+        "entities": manifest["counts"]["entities"],
+        "sec": round(time.time() - t0, 2),
+    }
     print(json.dumps(out), flush=True)
     return 0
 

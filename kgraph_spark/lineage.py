@@ -10,7 +10,7 @@ CONCURRENCY.md:96-120). The Spark restatement:
   * a stage's input is sharded by a deterministic hash of doc_id
     (pmod(xxhash64(doc_id), n_shards)) — any executor layout produces the
     same shard membership;
-  * pending shards run in waves of `max_concurrent`: one Spark job per
+  * pending shards run in waves of MAX_CONCURRENT: one Spark job per
     wave scans the documents once, keeps the wave's shards and writes the
     stage output partitioned by shard into a hidden staging directory;
   * each shard of the wave is then published by a directory rename and a
@@ -19,8 +19,15 @@ CONCURRENCY.md:96-120). The Spark restatement:
   * resume = skip shards whose commit marker exists — the anti-join on
     committed work, generalized. A kill loses at most one wave of work;
   * every shard appends a lineage row (stage, shard, docs, rows, seconds,
-    status) as soon as its wave is published, and every stage a metrics
-    row — both are append-only tables written on the driver.
+    status) as soon as its wave is published, and every checkpointed run
+    a metrics row — both are append-only tables written on the driver.
+
+checkpointed_pipeline is the resumable form of the one-shot run: the
+sharded extraction above, then the same graph construction and bundle
+write (pipeline.run_pipeline_from_extracted + export.write_bundle). Under
+its workdir it leaves `extracted/shard=<s>/` (the committed extraction),
+`lineage/` and `metrics/`; the four bundle tables and manifest.json go to
+its out_dir.
 """
 
 from __future__ import annotations
@@ -46,6 +53,8 @@ LINEAGE_SCHEMA = pa.schema([
 METRICS_SCHEMA = pa.schema([
     ("stage", pa.string()), ("counters_json", pa.string()), ("finished_at_unix", pa.int64()),
 ])
+# shards per wave: each wave is one Spark job, and a kill loses at most one wave
+MAX_CONCURRENT = 4
 
 
 def shard_col(doc_id_col, n_shards: int):
@@ -131,7 +140,6 @@ def run_sharded_stage(
     workdir: str,
     n_shards: int = 8,
     fail_after: int | None = None,
-    max_concurrent: int = 4,
 ) -> DataFrame:
     """Run `fn` over doc shards with skip-if-committed resume.
 
@@ -142,7 +150,7 @@ def run_sharded_stage(
     fail_after: test hook — raise once N shards of this run are committed,
     after their lineage rows are appended, to simulate a killed job.
 
-    Pending shards commit in waves of `max_concurrent`, each wave ONE Spark
+    Pending shards commit in waves of MAX_CONCURRENT, each wave ONE Spark
     job: it scans the documents once, keeps the wave's shards, runs `fn`
     and writes partitioned by shard into a hidden `_staging-<uuid>`
     directory. The job also takes each shard's input docs and output rows
@@ -150,7 +158,7 @@ def run_sharded_stage(
     wave is then published (stale directory removed, staged directory
     renamed into place, _SUCCESS touched; a shard with no output rows gets
     a schema-only file) and the wave's lineage rows are appended before the
-    next wave starts. A kill therefore loses at most `max_concurrent`
+    next wave starts. A kill therefore loses at most MAX_CONCURRENT
     shards of work, and the lineage rows of at most the wave it interrupts
     mid-publish. A lineage row's `seconds` is its wave's time. Leftovers of
     a killed run (staging directories, shard directories without _SUCCESS)
@@ -165,8 +173,8 @@ def run_sharded_stage(
         s for s in range(n_shards) if not (out_root / f"shard={s}" / "_SUCCESS").exists()
     ]  # committed shards skipped — resume = skip-if-exists (I4)
     todo = pending if fail_after is None else pending[:fail_after]
-    for i in range(0, len(todo), max_concurrent):
-        rows = _run_wave(stage, docs, fn, out_root, n_shards, todo[i:i + max_concurrent])
+    for i in range(0, len(todo), MAX_CONCURRENT):
+        rows = _run_wave(stage, docs, fn, out_root, n_shards, todo[i:i + MAX_CONCURRENT])
         _append_rows(Path(workdir) / "lineage", rows, LINEAGE_SCHEMA)
     if len(todo) < len(pending):
         raise RuntimeError(f"simulated kill after {len(todo)} shards")
@@ -191,34 +199,38 @@ def checkpointed_pipeline(
     docs: DataFrame,
     gazetteer_rows: list[tuple],
     workdir: str,
+    out_dir: str,
     n_shards: int = 8,
-    cfg=None,
     fail_after: int | None = None,
-):
-    """Resumable form of pipeline.run_pipeline: the expensive extraction
-    pass is sharded + checkpointed (kill → rerun recomputes only missing
-    shards); downstream graph construction runs from the committed
-    extraction table and its outputs are single atomic commits."""
-    from kgraph_spark.config import PipelineConfig
+) -> dict:
+    """Resumable form of pipeline.run_pipeline + export.write_bundle: the
+    expensive extraction pass is sharded + checkpointed under `workdir`
+    (kill → rerun recomputes only missing shards); graph construction then
+    runs from the committed extraction table and writes the four bundle
+    tables to `out_dir`, each table write a single atomic commit. Appends
+    one `bundle` metrics row with the manifest counts, releases what the
+    graph layers persisted, and returns the manifest."""
+    from kgraph_spark.operators.export import write_bundle
     from kgraph_spark.operators.mentions import extract_all
     from kgraph_spark.pipeline import run_pipeline_from_extracted
 
-    cfg = cfg or PipelineConfig()
     gaz_bcast = spark.sparkContext.broadcast(gazetteer_rows)
-    extracted = run_sharded_stage(
-        spark,
-        "extracted",
-        docs,
-        lambda d: extract_all(d, gaz_bcast, cfg),
-        workdir,
-        n_shards=n_shards,
-        fail_after=fail_after,
-    )
-    write_stage_metrics(workdir, "extracted", {"rows": extracted.count()})
-    result = run_pipeline_from_extracted(spark, extracted, gazetteer_rows, cfg)
-    triples_dir = Path(workdir) / "triples"
-    result.triples.write.mode("overwrite").parquet(str(triples_dir))
-    write_stage_metrics(
-        workdir, "triples", {"rows": spark.read.parquet(str(triples_dir)).count()}
-    )
-    return spark.read.parquet(str(triples_dir))
+    try:
+        extracted = run_sharded_stage(
+            spark,
+            "extracted",
+            docs,
+            lambda d: extract_all(d, gaz_bcast),
+            workdir,
+            n_shards=n_shards,
+            fail_after=fail_after,
+        )
+    finally:
+        gaz_bcast.destroy()
+    res = run_pipeline_from_extracted(spark, extracted, gazetteer_rows)
+    try:
+        manifest = write_bundle(res.tables, out_dir)
+    finally:
+        res.unpersist()
+    write_stage_metrics(workdir, "bundle", manifest["counts"])
+    return manifest

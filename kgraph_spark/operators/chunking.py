@@ -14,7 +14,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kgraph_spark.config import ChunkingConfig
@@ -97,18 +97,3 @@ def chunk_spans(
         gen,
         schema="doc_id string, content string, start_offset int, end_offset int, chunk_index int",
     )
-
-
-def paragraphs(docs: DataFrame) -> DataFrame:
-    """documents → (doc_id, para_idx, para_len, n_paras) — pure built-ins.
-
-    Feeds the co-occurrence window operator (F1): window j covers paragraphs
-    [j, j+N); windows only exist for j ≤ n_paras - N (sherlock
-    relationships.py:81-90)."""
-    d = assemble_content(docs)
-    exploded = d.select("doc_id", F.posexplode("paras").alias("para_idx", "para_text"))
-    return exploded.select(
-        "doc_id",
-        "para_idx",
-        F.length("para_text").alias("para_len"),
-    ).withColumn("n_paras", F.count("*").over(Window.partitionBy("doc_id")))

@@ -1,4 +1,4 @@
-"""Materialize / export (SURVEY.md §2 A5–A7, G1–G3).
+"""Materialize / export (SURVEY.md §2 A5–A7, G1–G2).
 
 Produces the four bundle tables of the reference's export contract
 (kgbundle/kgbundle/models.py: EntityRow / RelationshipRow / MentionRow /
@@ -12,18 +12,46 @@ import json
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kgraph_spark.config import PromotionConfig
 from kgraph_spark.operators.canonicalize import is_authoritative_col
-from kgraph_spark.session import local_frame
+
+
+def _entity_summary(max_supporting_documents: int, max_synonyms: int) -> list[Column]:
+    """The per-entity summary aggregates over resolved mentions, shared by
+    entities_table and tombstone_entities. supporting_documents / synonyms
+    are capped to a sorted deterministic prefix (same scale guard as
+    accumulate_triples' source_documents): a hot entity in 10% of a 100-TB
+    corpus must not materialize 10% of all doc ids in one row.
+    usage_count/total_mentions stay exact; the mentions table keeps full
+    provenance. entity_type and name are elected with ties broken by the
+    elected value itself, so the election is deterministic under any
+    encounter order."""
+    return [
+        F.min_by(
+            F.col("entity_type"),
+            F.struct(-F.col("confidence"), F.col("entity_type")),
+        ).alias("entity_type"),
+        F.max("confidence").alias("confidence"),
+        F.count("*").alias("usage_count"),
+        F.min_by(
+            F.col("text"),
+            F.struct(-F.col("confidence"), F.col("start_offset"), F.col("text")),
+        ).alias("name"),
+        F.slice(F.array_sort(F.collect_set("text")), 1, max_synonyms).alias("synonyms"),
+        F.min("doc_id").alias("first_seen_document"),
+        F.count("*").alias("total_mentions"),
+        F.slice(F.array_sort(F.collect_set("doc_id")), 1, max_supporting_documents).alias(
+            "supporting_documents"
+        ),
+    ]
 
 
 def entities_table(
     resolved_mentions: DataFrame,
     promo: PromotionConfig | None = None,
-    n_salts: int | None = None,
     max_supporting_documents: int = 10_000,
     max_synonyms: int = 1_000,
 ) -> DataFrame:
@@ -31,95 +59,11 @@ def entities_table(
 
     status: canonical when the merge key is an authoritative ontology id;
     provisional otherwise, force-promoted to canonical at confidence ≥ 0.7
-    (reference promotion.py:86-96, domain.py:106-109).
-
-    n_salts: two-phase salted aggregation for the hot-entity key (the skew
-    corpus plants one entity in ~10% of documents; its collect_set of
-    supporting documents otherwise materializes in a single reducer —
-    functions/skew.py rationale). Semantics identical (tested).
-
-    supporting_documents / synonyms are capped to a sorted deterministic
-    prefix (same scale guard as accumulate_triples' source_documents): a
-    hot entity in 10% of a 100-TB corpus must not materialize 10% of all
-    doc ids in one row. usage_count/total_mentions stay exact; the mentions
-    table keeps full provenance. In the salted path the cap applies PER
-    SALT too (bounding the phase-1 agg buffers), and by the same prefix
-    argument as accumulate_triples_salted the final prefix of the union of
-    per-salt prefixes equals the global prefix — output is identical to the
-    unsalted form at any cap (equivalence-tested)."""
+    (reference promotion.py:86-96, domain.py:106-109)."""
     promo = promo or PromotionConfig()
-    src = resolved_mentions
-    group_keys = ["entity_id"]
-    if n_salts:
-        from kgraph_spark.functions.skew import with_salt
-
-        src = with_salt(resolved_mentions, n_salts)
-        partial = src.groupBy("entity_id", "_salt").agg(
-            # ties broken by the elected value itself (lexicographic) so the
-            # election is deterministic under any encounter order and the
-            # salted min-of-mins equals the unsalted global min exactly
-            F.min_by(
-                F.col("entity_type"),
-                F.struct(-F.col("confidence"), F.col("entity_type")),
-            ).alias("_etype"),
-            F.max("confidence").alias("_conf"),
-            F.count("*").alias("_n"),
-            F.min_by(
-                F.struct(F.col("text"), F.col("confidence"), F.col("start_offset")),
-                F.struct(-F.col("confidence"), F.col("start_offset"), F.col("text")),
-            ).alias("_namerec"),
-            F.slice(F.array_sort(F.collect_set("text")), 1, max_synonyms).alias("_texts"),
-            F.min("doc_id").alias("_first"),
-            F.slice(F.array_sort(F.collect_set("doc_id")), 1, max_supporting_documents).alias(
-                "_docs"
-            ),
-        )
-        agg = partial.groupBy("entity_id").agg(
-            F.min_by(
-                F.col("_etype"), F.struct(-F.col("_conf"), F.col("_etype"))
-            ).alias("entity_type"),
-            F.max("_conf").alias("confidence"),
-            F.sum("_n").alias("usage_count"),
-            F.min_by(
-                F.col("_namerec.text"),
-                F.struct(
-                    -F.col("_namerec.confidence"),
-                    F.col("_namerec.start_offset"),
-                    F.col("_namerec.text"),
-                ),
-            ).alias("name"),
-            F.slice(
-                F.array_sort(F.array_distinct(F.flatten(F.collect_list("_texts")))),
-                1,
-                max_synonyms,
-            ).alias("synonyms"),
-            F.min("_first").alias("first_seen_document"),
-            F.sum("_n").alias("total_mentions"),
-            F.slice(
-                F.array_sort(F.array_distinct(F.flatten(F.collect_list("_docs")))),
-                1,
-                max_supporting_documents,
-            ).alias("supporting_documents"),
-        )
-    else:
-        agg = src.groupBy(*group_keys).agg(
-            F.min_by(
-                F.col("entity_type"),
-                F.struct(-F.col("confidence"), F.col("entity_type")),
-            ).alias("entity_type"),
-            F.max("confidence").alias("confidence"),
-            F.count("*").alias("usage_count"),
-            F.min_by(
-                F.col("text"),
-                F.struct(-F.col("confidence"), F.col("start_offset"), F.col("text")),
-            ).alias("name"),
-            F.slice(F.array_sort(F.collect_set("text")), 1, max_synonyms).alias("synonyms"),
-            F.min("doc_id").alias("first_seen_document"),
-            F.count("*").alias("total_mentions"),
-            F.slice(F.array_sort(F.collect_set("doc_id")), 1, max_supporting_documents).alias(
-                "supporting_documents"
-            ),
-        )
+    agg = resolved_mentions.groupBy("entity_id").agg(
+        *_entity_summary(max_supporting_documents, max_synonyms)
+    )
     is_auth = is_authoritative_col(F.col("entity_id"))
     promoted = (F.col("confidence") >= promo.force_promote_confidence) & (
         F.col("usage_count") >= promo.min_usage
@@ -148,22 +92,7 @@ def tombstone_entities(
         F.broadcast(mapping), "entity_id", "inner"  # inner keeps loser rows only
     )
     return losers.groupBy("entity_id").agg(
-        F.min_by(
-            F.col("entity_type"),
-            F.struct(-F.col("confidence"), F.col("entity_type")),
-        ).alias("entity_type"),
-        F.max("confidence").alias("confidence"),
-        F.count("*").alias("usage_count"),
-        F.min_by(
-            F.col("text"),
-            F.struct(-F.col("confidence"), F.col("start_offset"), F.col("text")),
-        ).alias("name"),
-        F.slice(F.array_sort(F.collect_set("text")), 1, max_synonyms).alias("synonyms"),
-        F.min("doc_id").alias("first_seen_document"),
-        F.count("*").alias("total_mentions"),
-        F.slice(F.array_sort(F.collect_set("doc_id")), 1, max_supporting_documents).alias(
-            "supporting_documents"
-        ),
+        *_entity_summary(max_supporting_documents, max_synonyms),
         F.min("final_id").alias("merged_into"),  # constant per loser
     ).withColumn("status", F.lit("merged"))
 
@@ -197,15 +126,6 @@ def evidence_table(validated_relations: DataFrame) -> DataFrame:
         "confidence",
         F.lit(True).alias("supports"),
     )
-
-
-def manifest(tables: dict[str, DataFrame]) -> dict:
-    """BundleManifestV1-style counts (models.py:119-138, export.py:176-288)."""
-    return {
-        "version": 1,
-        "created_at_unix": int(time.time()),
-        "counts": {name: df.count() for name, df in tables.items()},
-    }
 
 
 def write_bundle(tables: dict[str, DataFrame], out_dir: str) -> dict:
@@ -329,19 +249,6 @@ def write_bucketed_triples(
         .format("parquet")
         .saveAsTable(table_name)
     )
-
-
-def stage_metrics(df: DataFrame, stage: str, group_col: str | None = None) -> DataFrame:
-    """G3 stage statistics (kgraph/stage_models.py:73-262): per-stage counts,
-    optionally grouped — persisted by the pipeline into the metrics table
-    (north-rule lineage/metrics requirement)."""
-    if group_col:
-        return df.groupBy(F.col(group_col).alias("group_key")).agg(
-            F.count("*").alias("n")
-        ).withColumn("stage", F.lit(stage))
-    return local_frame(
-        df.sparkSession, [(stage, None, df.count())], "stage string, group_key string, n long"
-    ).select("group_key", "n", "stage")
 
 
 def merge_upsert(

@@ -57,12 +57,6 @@ MENTION_SCHEMA = (
     "end_offset int, confidence double, canonical_id_hint string, para_idx int"
 )
 
-RAW_RELATION_SCHEMA = (
-    "doc_id string, subject_text string, predicate string, object_text string, "
-    "confidence double, para_idx int, evidence string"
-)
-
-
 def extract_mentions(docs: DataFrame, gaz_bcast, cfg: ChunkingConfig | None = None) -> DataFrame:
     """documents → mentions (deduped per doc by normalized (name, type))."""
     cfg = cfg or ChunkingConfig()
@@ -284,29 +278,3 @@ def mentions_from_metadata(docs_with_entities: DataFrame) -> DataFrame:
             F.lit(0).alias("para_idx"),
         )
     )
-
-
-def extract_raw_relations(docs: DataFrame) -> DataFrame:
-    """documents → raw '<subj> <phrase> <obj>.' pattern hits (pre-resolution).
-
-    Deterministic stand-in for the reference's LLM relationship extractor
-    (F2, examples/medlit/pipeline/relationships.py:567-675) — the validation
-    chain downstream (operators/relationships.py) is extractor-agnostic."""
-    src = assemble_content(docs).select("doc_id", "paras")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, paras in zip(pdf["doc_id"], pdf["paras"]):
-                for r in extract_relations(list(paras)):
-                    rows.append(
-                        (did, r["subject_text"], r["predicate"], r["object_text"],
-                         r["confidence"], r["para_idx"], r["evidence"])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "subject_text", "predicate", "object_text",
-                         "confidence", "para_idx", "evidence"],
-            )
-
-    return src.mapInPandas(gen, schema=RAW_RELATION_SCHEMA)

@@ -17,7 +17,7 @@ Shuffle inventory (the scale story):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgraph_spark.config import PREDICATE_SPECS, PipelineConfig
@@ -126,21 +126,6 @@ def appears_in_triples(resolved_mentions: DataFrame, cfg: PipelineConfig) -> Dat
     )
 
 
-def windows_from_paragraphs(paragraphs: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """(doc_id, win_j) valid co-occurrence windows from the paragraphs
-    table: j ≤ n_paras - N and joined window text ≥ min chars. Standalone
-    operator form; the fused extractor (mentions.extract_all) emits the
-    same rows for free during extraction."""
-    N = cfg.cooccur_window
-    wlen = Window.partitionBy("doc_id").orderBy("para_idx").rowsBetween(0, N - 1)
-    return (
-        paragraphs.withColumn("win_len", F.sum("para_len").over(wlen) + F.lit(N - 1))
-        .filter(F.col("para_idx") <= F.col("n_paras") - N)
-        .filter(F.col("win_len") >= cfg.cooccur_min_chars)
-        .select("doc_id", F.col("para_idx").alias("win_j"))
-    )
-
-
 def cooccurrence_triples(
     resolved_mentions: DataFrame, windows: DataFrame, cfg: PipelineConfig
 ) -> DataFrame:
@@ -148,8 +133,8 @@ def cooccurrence_triples(
     pair present in the same window, counted per document; conf =
     min(0.95, 0.60 + 0.10·n) (sherlock relationships.py:81-112).
 
-    windows: (doc_id, win_j) valid windows (windows_from_paragraphs or the
-    fused extractor). 'Present in window j' ⇔ the entity has a mention in a
+    windows: (doc_id, win_j) valid windows (the fused extractor's 'w'
+    rows). 'Present in window j' ⇔ the entity has a mention in a
     paragraph k ∈ [j, j+N-1] — generated by exploding each mention's
     candidate window range (an equi-join, not a range join)."""
     N = cfg.cooccur_window

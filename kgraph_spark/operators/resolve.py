@@ -297,15 +297,6 @@ def rerank_authority_candidates(
     )
 
 
-def usage_counts(resolved_mentions: DataFrame) -> DataFrame:
-    """D6 usage accumulation: the reference's per-mention += 1
-    (ingest.py:353-374) as a partial-aggregating groupBy."""
-    return resolved_mentions.groupBy("entity_id").agg(
-        F.count("*").alias("usage_count"),
-        F.countDistinct("doc_id").alias("document_count"),
-    )
-
-
 def fuzzy_name_join(
     queries: DataFrame,
     names: DataFrame,

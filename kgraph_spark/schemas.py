@@ -1,8 +1,10 @@
-"""Fixed StructType schemas for every pipeline table.
+"""Fixed StructType schemas: the input documents, chunks and the predicate
+spec dimension.
 
-Mirrors the reference's frozen Pydantic models (kgschema/kgschema/entity.py:102-249,
-relationship.py:40-107, document.py:28-88; bundle contract kgbundle/kgbundle/models.py)
-re-expressed as Spark columnar schemas — SURVEY.md §1.1 table."""
+Mirrors the reference's frozen Pydantic models (document.py:28-88,
+kgraph/pipeline/streaming.py:53-76, domain_spec.py:285-399) re-expressed
+as Spark columnar schemas — SURVEY.md §1.1 table. The bundle tables'
+schemas are the select lists in operators/export.py."""
 
 from __future__ import annotations
 
@@ -35,45 +37,6 @@ CHUNK = T.StructType(
     ]
 )
 
-# ---- mentions (reference EntityMention, kgschema/kgschema/entity.py:190-249) ----
-MENTION = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("entity_type", T.StringType(), False),
-        T.StructField("start_offset", T.IntegerType(), False),
-        T.StructField("end_offset", T.IntegerType(), False),
-        T.StructField("confidence", T.DoubleType(), False),
-        T.StructField("context", T.StringType(), True),
-        T.StructField("canonical_id_hint", T.StringType(), True),
-        T.StructField("para_idx", T.IntegerType(), False),   # span index of mention start
-    ]
-)
-
-# raw relation-pattern hits before entity resolution (reference F2/F3 shape)
-RAW_RELATION = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("subject_text", T.StringType(), False),
-        T.StructField("predicate", T.StringType(), False),
-        T.StructField("object_text", T.StringType(), False),
-        T.StructField("confidence", T.DoubleType(), False),
-        T.StructField("para_idx", T.IntegerType(), False),
-        T.StructField("evidence", T.StringType(), True),
-    ]
-)
-
-# ---- KB dictionary (broadcast dim; reference authority_lookup / canonical cache) ----
-KB = T.StructType(
-    [
-        T.StructField("canonical_id", T.StringType(), False),
-        T.StructField("name", T.StringType(), False),
-        T.StructField("entity_type", T.StringType(), False),
-        T.StructField("synonyms", T.ArrayType(T.StringType()), True),
-        T.StructField("url", T.StringType(), True),
-    ]
-)
-
 # ---- predicate spec / constraints (reference domain_spec.py:285-399) ----
 PREDICATE_SPEC = T.StructType(
     [
@@ -83,33 +46,5 @@ PREDICATE_SPEC = T.StructType(
         T.StructField("specificity", T.IntegerType(), False),
         T.StructField("symmetric", T.BooleanType(), False),
         T.StructField("is_merge_signal", T.BooleanType(), False),
-    ]
-)
-
-# ---- output contract (kgbundle EntityRow / RelationshipRow / MentionRow / EvidenceRow) ----
-ENTITY_ROW = T.StructType(
-    [
-        T.StructField("entity_id", T.StringType(), False),
-        T.StructField("entity_type", T.StringType(), False),
-        T.StructField("name", T.StringType(), False),
-        T.StructField("status", T.StringType(), False),  # canonical | provisional
-        T.StructField("confidence", T.DoubleType(), False),
-        T.StructField("usage_count", T.LongType(), False),
-        T.StructField("synonyms", T.ArrayType(T.StringType()), True),
-        T.StructField("canonical_ids", T.MapType(T.StringType(), T.StringType()), True),
-        T.StructField("first_seen_document", T.StringType(), True),
-        T.StructField("total_mentions", T.LongType(), False),
-        T.StructField("supporting_documents", T.ArrayType(T.StringType()), True),
-    ]
-)
-
-TRIPLE_ROW = T.StructType(
-    [
-        T.StructField("subject_id", T.StringType(), False),
-        T.StructField("predicate", T.StringType(), False),
-        T.StructField("object_id", T.StringType(), False),
-        T.StructField("confidence", T.DoubleType(), False),
-        T.StructField("source_documents", T.ArrayType(T.StringType()), False),
-        T.StructField("evidence_count", T.LongType(), False),
     ]
 )

@@ -261,13 +261,6 @@ def documents_df(spark, n_docs: int, seed: int = SEED, partitions: int | None = 
     return rng_df.mapInPandas(gen, schema=DOCUMENTS)
 
 
-def kb_df(spark, seed: int = SEED):
-    from kgraph_spark.schemas import KB
-
-    vocab = build_vocabulary(seed)
-    return spark.createDataFrame(vocab["kb_rows"], schema=KB)
-
-
 def gazetteer_rows(seed: int = SEED) -> list[tuple]:
     """Plain-tuple form of the gazetteer for broadcasting: (alias, cid, type, conf)."""
     vocab = build_vocabulary(seed)

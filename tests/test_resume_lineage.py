@@ -1,8 +1,12 @@
-"""I4 / north-rule resumability: kill mid-stage, rerun, identical output,
-committed shards not recomputed; lineage + metrics rows recorded."""
+"""I4 / north-rule resumability: kill mid-stage, rerun, the same bundle as
+the one-shot run, committed shards not recomputed; lineage + metrics rows
+recorded. The resumable run is the two halves the benchmark measures —
+sharded extraction, then graph construction + bundle write — and nothing
+else."""
 
 from __future__ import annotations
 
+import json
 import os
 import time
 from pathlib import Path
@@ -10,20 +14,29 @@ from pathlib import Path
 import pytest
 
 from kgraph_spark import synth
-from kgraph_spark.lineage import checkpointed_pipeline, read_lineage
-from kgraph_spark.pipeline import run_pipeline
+from kgraph_spark.lineage import checkpointed_pipeline, read_lineage, run_sharded_stage
+from kgraph_spark.operators.export import write_bundle
+from kgraph_spark.operators.mentions import extract_all
+from kgraph_spark.pipeline import run_pipeline, run_pipeline_from_extracted
 
 N_DOCS = 150
+
+
+def triple_rows(df) -> set:
+    return {(r["subject_id"], r["predicate"], r["object_id"], r["confidence"], r["evidence_count"])
+            for r in df.collect()}
 
 
 def test_kill_and_resume(spark, tmp_path):
     docs = synth.documents_df(spark, N_DOCS)
     gaz = synth.gazetteer_rows()
     workdir = str(tmp_path / "ckpt")
+    out = str(tmp_path / "bundle")
 
     # killed run: simulate failure after 3 of 8 shards
     with pytest.raises(RuntimeError, match="simulated kill"):
-        checkpointed_pipeline(spark, docs, gaz, workdir, n_shards=8, fail_after=3)
+        checkpointed_pipeline(spark, docs, gaz, workdir, out, n_shards=8, fail_after=3)
+    assert not Path(out).exists()
 
     committed = sorted(
         int(p.name.split("=")[1])
@@ -38,37 +51,90 @@ def test_kill_and_resume(spark, tmp_path):
 
     time.sleep(1.1)
     # resume: completes remaining shards without touching committed ones
-    triples = checkpointed_pipeline(spark, docs, gaz, workdir, n_shards=8)
+    manifest = checkpointed_pipeline(spark, docs, gaz, workdir, out, n_shards=8)
     for s, before in mtimes_before.items():
         after = os.path.getmtime(Path(workdir) / "extracted" / f"shard={s}" / "_SUCCESS")
         assert after == before, f"shard {s} was recomputed on resume"
 
-    # identical output to the non-checkpointed pipeline
+    # the same four tables as the one-shot run, and the same triples
     plain = run_pipeline(spark, docs, gaz)
-    got = {(r["subject_id"], r["predicate"], r["object_id"], r["confidence"], r["evidence_count"])
-           for r in triples.collect()}
-    want = {(r["subject_id"], r["predicate"], r["object_id"], r["confidence"], r["evidence_count"])
-            for r in plain.triples.collect()}
-    assert got == want
+    one_shot = write_bundle(plain.tables, str(tmp_path / "one_shot"))
+    assert sorted(manifest["counts"]) == ["entities", "evidence", "mentions", "relationships"]
+    assert manifest["counts"] == one_shot["counts"]
+    assert json.loads((Path(out) / "manifest.json").read_text())["counts"] == manifest["counts"]
+    assert triple_rows(spark.read.parquet(out + "/relationships")) == triple_rows(plain.triples)
     plain.unpersist()
+    # the workdir holds the committed extraction and the two tables only
+    assert sorted(p.name for p in Path(workdir).iterdir()) == ["extracted", "lineage", "metrics"]
 
-    # lineage: one committed row per shard; metrics rows for both stages
+    # lineage: one committed row per shard; one metrics row, the bundle's
     lin = read_lineage(spark, workdir)
     rows = {(r["stage"], r["shard"]): r for r in lin.collect()}
     assert len(rows) == 8
     assert all(r["status"] == "committed" for r in rows.values())
     assert sum(r["n_input_docs"] for r in rows.values()) == N_DOCS
-    metrics = spark.read.parquet(str(Path(workdir) / "metrics"))
-    assert {r["stage"] for r in metrics.collect()} == {"extracted", "triples"}
+    metrics = spark.read.parquet(str(Path(workdir) / "metrics")).collect()
+    assert {r["stage"] for r in metrics} == {"bundle"}
+    assert [json.loads(r["counters_json"]) for r in metrics] == [manifest["counts"]]
 
 
 def test_rerun_is_idempotent(spark, tmp_path):
     docs = synth.documents_df(spark, 60)
     gaz = synth.gazetteer_rows()
     workdir = str(tmp_path / "ckpt2")
-    t1 = checkpointed_pipeline(spark, docs, gaz, workdir, n_shards=4)
-    n1 = t1.count()
-    t2 = checkpointed_pipeline(spark, docs, gaz, workdir, n_shards=4)
-    assert t2.count() == n1
+    out = str(tmp_path / "bundle")
+    m1 = checkpointed_pipeline(spark, docs, gaz, workdir, out, n_shards=4)
+    m2 = checkpointed_pipeline(spark, docs, gaz, workdir, out, n_shards=4)
+    assert m2["counts"] == m1["counts"]
+    assert spark.read.parquet(out + "/relationships").count() == m1["counts"]["relationships"]
     # second run added no lineage rows (nothing recomputed)
     assert read_lineage(spark, workdir).count() == 4
+
+
+def _settled_job_count(sc, group: str) -> int:
+    """Jobs of a group, once the asynchronous status listener stops adding
+    any."""
+    n, deadline = -1, time.monotonic() + 10
+    while time.monotonic() < deadline:
+        time.sleep(0.5)
+        m = len(sc.statusTracker().getJobIdsForGroup(group))
+        if m == n:
+            break
+        n = m
+    return n
+
+
+def test_resume_is_the_two_halves(spark, tmp_path):
+    """A checkpointed run launches exactly the Spark jobs of
+    run_sharded_stage(extract_all) plus run_pipeline_from_extracted +
+    write_bundle on the same input — no count, re-read or second write of
+    its own — and leaves nothing cached."""
+    docs = synth.documents_df(spark, 60)
+    gaz = synth.gazetteer_rows()
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("resume-halves-extract", "run_sharded_stage")
+        gb = sc.broadcast(gaz)
+        extracted = run_sharded_stage(
+            spark, "extracted", docs, lambda d: extract_all(d, gb), str(tmp_path / "a"),
+            n_shards=4,
+        )
+        sc.setJobGroup("resume-halves-graph", "run_pipeline_from_extracted + write_bundle")
+        res = run_pipeline_from_extracted(spark, extracted, gaz)
+        halves = write_bundle(res.tables, str(tmp_path / "a_bundle"))
+        res.unpersist()
+        gb.destroy()
+
+        n_cached = sc._jsc.getPersistentRDDs().size()
+        sc.setJobGroup("resume-checkpointed", "checkpointed_pipeline")
+        manifest = checkpointed_pipeline(
+            spark, docs, gaz, str(tmp_path / "b"), str(tmp_path / "b_bundle"), n_shards=4
+        )
+        assert sc._jsc.getPersistentRDDs().size() == n_cached
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert manifest["counts"] == halves["counts"]
+    n_extract = _settled_job_count(sc, "resume-halves-extract")
+    n_graph = _settled_job_count(sc, "resume-halves-graph")
+    assert n_extract >= 1 and n_graph >= 4
+    assert _settled_job_count(sc, "resume-checkpointed") == n_extract + n_graph

@@ -75,8 +75,7 @@ def test_failed_wave_keeps_committed_waves_and_their_lineage(spark, tmp_path, do
         return out
 
     with pytest.raises(Exception, match="wave two died"):
-        run_sharded_stage(spark, "extracted", docs, dies_on_second_wave, workdir,
-                          n_shards=8, max_concurrent=4)
+        run_sharded_stage(spark, "extracted", docs, dies_on_second_wave, workdir, n_shards=8)
     assert committed(stage_dir) == [0, 1, 2, 3]
     rows = lineage_by_shard(spark, workdir)
     assert sorted(rows) == [0, 1, 2, 3]
@@ -171,7 +170,7 @@ def test_output_without_input_doc_id_is_rejected(spark, tmp_path, docs, extract)
         run_sharded_stage(
             spark, "extracted", docs,
             lambda d: extract(d).withColumn("doc_id", F.concat("doc_id", F.lit("#"))),
-            str(workdir), n_shards=8, max_concurrent=4,
+            str(workdir), n_shards=8,
         )
     assert committed(workdir / "extracted") == []
     assert not (workdir / "lineage").exists()
@@ -194,8 +193,7 @@ def test_one_job_per_wave(spark, tmp_path, docs, extract):
     workdir = tmp_path / "ckpt"
     try:
         sc.setJobGroup("sharded-stage-jobs", "run_sharded_stage")
-        run_sharded_stage(spark, "extracted", docs, extract, str(workdir),
-                          n_shards=8, max_concurrent=4)
+        run_sharded_stage(spark, "extracted", docs, extract, str(workdir), n_shards=8)
         # two wave writes plus the schema listing of the returned read
         assert 2 <= _jobs_in_group(sc, "sharded-stage-jobs", at_least=2) <= 4
 

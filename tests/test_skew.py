@@ -1,48 +1,5 @@
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from kgraph_spark.functions.skew import salted_agg, salted_collect_set, salted_count
-
-
-def test_salted_count_equivalence(spark):
-    # skewed: one hot key with 5000 rows, 50 cold keys with 10 each
-    hot = spark.range(5000).select(F.lit("hot").alias("k"))
-    cold = spark.range(500).select(F.concat(F.lit("c"), (F.col("id") % 50)).alias("k"))
-    df = hot.union(cold)
-    got = {r["k"]: r["count"] for r in salted_count(df, ["k"]).collect()}
-    want = {r["k"]: r["count"] for r in df.groupBy("k").count().collect()}
-    assert got == want
-
-
-def test_salted_collect_set_equivalence(spark):
-    df = spark.range(2000).select(
-        F.lit("hot").alias("k"), F.concat(F.lit("d"), (F.col("id") % 300)).alias("doc")
-    )
-    got = salted_collect_set(df, ["k"], "doc").collect()[0]["docs"]
-    want = sorted({f"d{i}" for i in range(300)})
-    assert got == want
-
-
-def test_salted_agg_custom(spark):
-    df = spark.range(1000).select(
-        (F.col("id") % 3).alias("k"), F.col("id").cast("double").alias("v")
-    )
-    out = {
-        r["k"]: (r["total"], r["mx"])
-        for r in salted_agg(
-            df,
-            ["k"],
-            [F.sum("v").alias("_s"), F.max("v").alias("_m")],
-            lambda _d: [F.sum("_s").alias("total"), F.max("_m").alias("mx")],
-        ).collect()
-    }
-    want = {
-        r["k"]: (r["total"], r["mx"])
-        for r in df.groupBy("k").agg(F.sum("v").alias("total"), F.max("v").alias("mx")).collect()
-    }
-    assert out == want
-
 
 def test_salted_triple_accumulation_equivalence(spark):
     """accumulate_triples_salted must equal accumulate_triples exactly —

@@ -144,7 +144,12 @@ def test_spark_submit_checkpoint_resume(tmp_path):
     assert second.returncode == 0, second.stderr[-3000:]
     lines = [ln for ln in second.stdout.splitlines() if ln.startswith("{")]
     rec = json.loads(lines[-1])
-    assert rec["docs"] == 80 and rec["triples"] > 0
+    assert rec["docs"] == 80 and rec["triples"] > 0 and rec["entities"] > 0
+    # the resumable run writes the same four-table bundle as the one-shot run
+    manifest = json.loads((tmp_path / "bundle" / "manifest.json").read_text())
+    assert sorted(manifest["counts"]) == ["entities", "evidence", "mentions", "relationships"]
+    assert manifest["counts"]["relationships"] == rec["triples"]
+    assert manifest["counts"]["entities"] == rec["entities"]
     # resume skipped the already-committed shards
     for p, m in mtimes.items():
         assert p.stat().st_mtime_ns == m, f"shard recomputed: {p}"
