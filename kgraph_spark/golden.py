@@ -37,6 +37,47 @@ from kgraph_spark.functions.normalize import norm_dedup_py
 _CONSTRAINTS = {p: (st, ot) for (p, st, ot, _sp, _sy, _ms) in PREDICATE_SPECS}
 
 
+def validate_doc_relations(rels: list[dict]) -> list[dict]:
+    """F6 swap + F7 constraints + F8 specificity dedup over ONE document's
+    resolved relations (dicts with subject/object id and type, predicate,
+    confidence, evidence) — the twin of relationships.validate_relations."""
+    validated: list[dict] = []
+    for r in rels:
+        pred = r["predicate"]
+        if pred == "same_as":
+            continue  # consumed as merge signal, not emitted
+        st, ot = r["subject_type"], r["object_type"]
+        cons = _CONSTRAINTS.get(pred)
+        if cons is None:
+            continue  # unknown predicate → reject (F7)
+        sub_ok = cons[0] is None or st in cons[0]
+        obj_ok = cons[1] is None or ot in cons[1]
+        if not (sub_ok and obj_ok):
+            swap_sub_ok = cons[0] is None or ot in cons[0]
+            swap_obj_ok = cons[1] is None or st in cons[1]
+            if swap_sub_ok and swap_obj_ok:  # F6 swap correction
+                r = {**r, "subject_id": r["object_id"], "object_id": r["subject_id"],
+                     "subject_type": ot, "object_type": st}
+            else:
+                continue  # F7 reject
+        validated.append(r)
+
+    # F8: per (subject, object) keep most specific predicate — ordering
+    # key mirrors the Spark min-of-struct EXACTLY: (spec DESC, conf DESC,
+    # predicate ASC, evidence ASC)
+    def _f8_key(r: dict) -> tuple:
+        return (-SPECIFICITY.get(r["predicate"], 0), -r["confidence"],
+                r["predicate"], r["evidence"])
+
+    best_so: dict[tuple[str, str], dict] = {}
+    for r in validated:
+        k = (r["subject_id"], r["object_id"])
+        cur = best_so.get(k)
+        if cur is None or _f8_key(r) < _f8_key(cur):
+            best_so[k] = r
+    return list(best_so.values())
+
+
 def prov_id(name: str, entity_type: str) -> str:
     """Content-hashed provisional id (replaces reference uuid slug,
     dedup.py:209-211) — deterministic across executors/runs. sha256 (not
@@ -172,40 +213,7 @@ def run_golden(docs: list[dict], gaz: list[GazetteerEntry], cfg: PipelineConfig 
             t["evidence"].append((conf, quote))
 
     for did, rels in doc_relations.items():
-        validated: list[dict] = []
-        for r in rels:
-            pred = r["predicate"]
-            if pred == "same_as":
-                continue  # consumed as merge signal, not emitted
-            st, ot = r["subject_type"], r["object_type"]
-            cons = _CONSTRAINTS.get(pred)
-            if cons is None:
-                continue  # unknown predicate → reject (F7)
-            sub_ok = cons[0] is None or st in cons[0]
-            obj_ok = cons[1] is None or ot in cons[1]
-            if not (sub_ok and obj_ok):
-                swap_sub_ok = cons[0] is None or ot in cons[0]
-                swap_obj_ok = cons[1] is None or st in cons[1]
-                if swap_sub_ok and swap_obj_ok:  # F6 swap correction
-                    r = {**r, "subject_id": r["object_id"], "object_id": r["subject_id"],
-                         "subject_type": ot, "object_type": st}
-                else:
-                    continue  # F7 reject
-            validated.append(r)
-        # F8: per (subject, object) keep most specific predicate — ordering
-        # key mirrors the Spark min-of-struct EXACTLY: (spec DESC, conf DESC,
-        # predicate ASC, evidence ASC)
-        def _f8_key(r: dict) -> tuple:
-            return (-SPECIFICITY.get(r["predicate"], 0), -r["confidence"],
-                    r["predicate"], r["evidence"])
-
-        best_so: dict[tuple[str, str], dict] = {}
-        for r in validated:
-            k = (r["subject_id"], r["object_id"])
-            cur = best_so.get(k)
-            if cur is None or _f8_key(r) < _f8_key(cur):
-                best_so[k] = r
-        for r in best_so.values():
+        for r in validate_doc_relations(rels):
             add_triple(final_id(r["subject_id"]), r["predicate"], final_id(r["object_id"]),
                        r["confidence"], did, quote=r["evidence"])
 

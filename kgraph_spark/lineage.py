@@ -27,11 +27,14 @@ sharded extraction above, then the same graph construction and bundle
 write (pipeline.run_pipeline_from_extracted + export.write_bundle). Under
 its workdir it leaves `extracted/shard=<s>/` (the committed extraction),
 `lineage/` and `metrics/`; the four bundle tables and manifest.json go to
-its out_dir.
+its out_dir. The manifest records the digests of the inputs it was built
+from, so a rerun over the same committed shards and gazetteer returns it
+without building the graph again.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import shutil
 import time
@@ -78,6 +81,11 @@ def _observe_shards(df: DataFrame, shard: Column, wave: list[int]) -> tuple[Data
     counts = [F.sum((shard == s).cast("long")).alias(str(s)) for s in wave]
     stray = F.sum((~shard.isin(wave)).cast("long")).alias("stray")
     return df.observe(obs, *counts, stray), obs
+
+
+def _pending_shards(out_root: Path, n_shards: int) -> list[int]:
+    """Shards without a commit marker."""
+    return [s for s in range(n_shards) if not (out_root / f"shard={s}" / "_SUCCESS").exists()]
 
 
 def _remove_leftovers(out_root: Path) -> None:
@@ -169,9 +177,7 @@ def run_sharded_stage(
     out_root = Path(workdir) / stage
     out_root.mkdir(parents=True, exist_ok=True)
     _remove_leftovers(out_root)
-    pending = [
-        s for s in range(n_shards) if not (out_root / f"shard={s}" / "_SUCCESS").exists()
-    ]  # committed shards skipped — resume = skip-if-exists (I4)
+    pending = _pending_shards(out_root, n_shards)  # resume = skip-if-exists (I4)
     todo = pending if fail_after is None else pending[:fail_after]
     for i in range(0, len(todo), MAX_CONCURRENT):
         rows = _run_wave(stage, docs, fn, out_root, n_shards, todo[i:i + MAX_CONCURRENT])
@@ -194,6 +200,21 @@ def read_lineage(spark: SparkSession, workdir: str) -> DataFrame:
     return spark.read.parquet(str(Path(workdir) / "lineage"))
 
 
+def _bundle_inputs(workdir: str, stage: str, gazetteer_rows: list[tuple]) -> dict:
+    """What a bundle is built from: the stage's lineage rows (one per shard
+    commit, so a new or re-committed shard changes them), read on the
+    driver, and the gazetteer rows. Digests of both."""
+    lineage = Path(workdir) / "lineage"
+    rows = []
+    if lineage.exists():
+        rows = [json.dumps(r, sort_keys=True) for r in pq.read_table(lineage).to_pylist()
+                if r["stage"] == stage]
+    return {
+        f"{stage}_lineage": hashlib.sha256("\n".join(sorted(rows)).encode()).hexdigest(),
+        "gazetteer": hashlib.sha256(json.dumps(gazetteer_rows, default=str).encode()).hexdigest(),
+    }
+
+
 def checkpointed_pipeline(
     spark: SparkSession,
     docs: DataFrame,
@@ -209,10 +230,21 @@ def checkpointed_pipeline(
     runs from the committed extraction table and writes the four bundle
     tables to `out_dir`, each table write a single atomic commit. Appends
     one `bundle` metrics row with the manifest counts, releases what the
-    graph layers persisted, and returns the manifest."""
+    graph layers persisted, and returns the manifest.
+
+    A rerun whose every shard is committed, and whose out_dir holds a
+    manifest written for the same lineage rows and gazetteer, returns that
+    manifest and runs no Spark job; a new shard, a changed gazetteer or a
+    missing manifest rebuild the bundle."""
     from kgraph_spark.operators.export import write_bundle
     from kgraph_spark.operators.mentions import extract_all
     from kgraph_spark.pipeline import run_pipeline_from_extracted
+
+    done = Path(out_dir) / "manifest.json"
+    if done.exists() and not _pending_shards(Path(workdir) / "extracted", n_shards):
+        manifest = json.loads(done.read_text())
+        if manifest.get("inputs") == _bundle_inputs(workdir, "extracted", gazetteer_rows):
+            return manifest
 
     gaz_bcast = spark.sparkContext.broadcast(gazetteer_rows)
     try:
@@ -229,7 +261,9 @@ def checkpointed_pipeline(
         gaz_bcast.destroy()
     res = run_pipeline_from_extracted(spark, extracted, gazetteer_rows)
     try:
-        manifest = write_bundle(res.tables, out_dir)
+        manifest = write_bundle(
+            res.tables, out_dir, inputs=_bundle_inputs(workdir, "extracted", gazetteer_rows)
+        )
     finally:
         res.unpersist()
     write_stage_metrics(workdir, "bundle", manifest["counts"])

@@ -199,12 +199,11 @@ def apply_merge(df: DataFrame, mapping: DataFrame, *cols: str) -> DataFrame:
                 F.col("entity_id").alias(f"_m_{c}"), F.col("final_id").alias(f"_f_{c}")
             )
         )
-        out = (
-            out.join(m, out[c] == F.col(f"_m_{c}"), "left")
-            .withColumn(c, F.coalesce(F.col(f"_f_{c}"), F.col(c)))
-            .drop(f"_m_{c}", f"_f_{c}")
-        )
-    return out
+        out = out.join(m, F.col(c) == F.col(f"_m_{c}"), "left")
+    return out.select(
+        *[F.coalesce(F.col(f"_f_{c}"), F.col(c)).alias(c) if c in cols else F.col(c)
+          for c in df.columns]
+    )
 
 
 def incremental_components(mapping: DataFrame, new_edges: DataFrame) -> DataFrame:

@@ -91,6 +91,29 @@ def tombstone_entities(
     losers = pre_merge_mentions.join(
         F.broadcast(mapping), "entity_id", "inner"  # inner keeps loser rows only
     )
+    return _tombstones(losers, max_supporting_documents, max_synonyms)
+
+
+def tombstones_of_merged(
+    merged_mentions: DataFrame,
+    pre_merge_col: str,
+    max_supporting_documents: int = 10_000,
+    max_synonyms: int = 1_000,
+) -> DataFrame:
+    """tombstone_entities over mentions that already went through the merge
+    and kept their pre-merge id in `pre_merge_col`: a loser's mentions are
+    the rows whose two ids differ, so no join against the mapping is
+    needed."""
+    losers = merged_mentions.filter(F.col(pre_merge_col) != F.col("entity_id")).select(
+        "doc_id", "text", "entity_type", "start_offset", "confidence",
+        F.col(pre_merge_col).alias("entity_id"), F.col("entity_id").alias("final_id"),
+    )
+    return _tombstones(losers, max_supporting_documents, max_synonyms)
+
+
+def _tombstones(losers: DataFrame, max_supporting_documents: int, max_synonyms: int) -> DataFrame:
+    """Loser mention rows carrying entity_id (the loser) and final_id (its
+    winner) → one status='merged' entity row per loser."""
     return losers.groupBy("entity_id").agg(
         *_entity_summary(max_supporting_documents, max_synonyms),
         F.min("final_id").alias("merged_into"),  # constant per loser
@@ -128,17 +151,21 @@ def evidence_table(validated_relations: DataFrame) -> DataFrame:
     )
 
 
-def write_bundle(tables: dict[str, DataFrame], out_dir: str) -> dict:
+def write_bundle(tables: dict[str, DataFrame], out_dir: str, inputs: dict | None = None) -> dict:
     """A6/A7 sink: one parquet table per bundle component + manifest.json.
 
     Parquet stands in for Iceberg locally (no Iceberg runtime jar in this
     sandbox); the writer API is the same `df.write` path and each table write
-    is the atomic stage commit."""
+    is the atomic stage commit. `inputs`, when given, is recorded in the
+    manifest: what the bundle was built from (lineage.checkpointed_pipeline
+    compares it on a rerun)."""
     from pyspark.sql import Observation
 
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
     m = {"version": 1, "created_at_unix": int(time.time()), "counts": {}}
+    if inputs is not None:
+        m["inputs"] = inputs
     for name, df in tables.items():
         path = str(out / name)
         # manifest count observed ON the write job itself — one scan per

@@ -3,15 +3,21 @@
 
 Everything here is pure DataFrame algebra — the validation chain the
 reference runs per-row in Python (examples/medlit/pipeline/relationships.py,
-dedup.py:435-514) becomes broadcast joins + column expressions, and the
-sherlock co-occurrence extractor (examples/sherlock/pipeline/relationships.py:32-112)
-becomes an explode + self-join on (doc, window) keys.
+dedup.py:435-514) becomes column expressions with the predicate spec
+inlined (its rows are collected from the local relation and written into
+CASE / IN expressions — no join, no broadcast), and the sherlock
+co-occurrence extractor (examples/sherlock/pipeline/relationships.py:32-112)
+becomes an explode + per-document grouping on (doc, window) keys.
 
 Shuffle inventory (the scale story):
-  * validation: zero shuffles (broadcast constraint dim + window-dedup per
-    doc key, which co-partitions with the extraction output);
-  * co-occurrence: one shuffle on (doc_id, window_j) for the pair self-join —
-    keys are per-document so cardinality is bounded and skew-free;
+  * validation: one shuffle on (doc_id, subject, object) for the F8
+    election, with map-side partial aggregation; symmetric ordering none;
+  * co-occurrence (cooccurrence_accumulated, the pipeline's form): a
+    shuffle on (doc_id, entity code) for the window sets and one on doc_id
+    for the per-document sets — keys are per-document so cardinality is
+    bounded and skew-free — then one on the pair codes for the cross-doc
+    accumulation, plus the distinct over the code dictionary, which is
+    broadcast for the decode;
   * accumulation: one shuffle on the (s,p,o) triple key with map-side partial
     aggregation (the reference's dict upsert, memory.py:399-422)."""
 
@@ -30,43 +36,60 @@ def predicate_spec_df(spark: SparkSession) -> DataFrame:
     return local_frame(spark, PREDICATE_SPECS, PREDICATE_SPEC)
 
 
+def _sql_str(s: str) -> str:
+    """A Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _by_predicate(values: dict[str, str]) -> str:
+    """SQL: CASE predicate WHEN p THEN values[p] ... END (NULL otherwise)."""
+    if not values:
+        return "NULL"
+    whens = " ".join(f"WHEN {_sql_str(p)} THEN {v}" for p, v in values.items())
+    return f"CASE predicate {whens} END"
+
+
+def _type_ok(types: list[str] | None, col: str) -> str:
+    """SQL: an endpoint type against one spec type list (None = any type),
+    with the null semantics array_contains has over the spec's array
+    column."""
+    if types is None:
+        return "true"
+    return f"array_contains(CAST(array({', '.join(map(_sql_str, types))}) AS ARRAY<STRING>), {col})"
+
+
 def validate_relations(resolved: DataFrame, spec: DataFrame) -> DataFrame:
     """F6 swap correction + F7 type-constraint validation + F8 specificity
     dedup, per document.
 
     resolved: output of resolve.resolve_relation_endpoints (same_as rows are
-    consumed by canonicalize, not validated here)."""
-    sp = F.broadcast(spec)
-    r = resolved.filter(F.col("predicate") != "same_as").join(sp, "predicate", "inner")
+    consumed by canonicalize, not validated here).
 
-    sub_ok = F.col("subject_types").isNull() | F.array_contains(
-        F.col("subject_types"), F.col("subject_type")
-    )
-    obj_ok = F.col("object_types").isNull() | F.array_contains(
-        F.col("object_types"), F.col("object_type")
-    )
-    swap_sub_ok = F.col("subject_types").isNull() | F.array_contains(
-        F.col("subject_types"), F.col("object_type")
-    )
-    swap_obj_ok = F.col("object_types").isNull() | F.array_contains(
-        F.col("object_types"), F.col("subject_type")
-    )
-    valid_asis = sub_ok & obj_ok
-    should_swap = ~valid_asis & swap_sub_ok & swap_obj_ok  # F6 (dedup.py:178-206)
-
-    r = (
-        r.withColumn("_keep", valid_asis | should_swap)
-        .filter(F.col("_keep"))
-        .withColumn(
-            "_s", F.when(should_swap, F.col("object_id")).otherwise(F.col("subject_id"))
+    The spec is a driver-built dimension (predicate_spec_df, a JVM local
+    relation), so its rows are collected (no Spark job) and inlined as one
+    SQL CASE over the predicate per decision — keep, swap, specificity —
+    instead of a broadcast join. Each CASE is parsed from one SQL string:
+    one py4j round trip, where building it from Column calls took over a
+    thousand per validation. A predicate missing
+    from the spec (or same_as, or null) gets a NULL keep and is dropped,
+    as the inner join dropped it."""
+    keep, swap, neg_specificity = {}, {}, {}
+    for row in spec.select("predicate", "subject_types", "object_types", "specificity").collect():
+        if row["predicate"] == "same_as":
+            continue
+        st, ot = row["subject_types"], row["object_types"]
+        valid_asis = f"({_type_ok(st, 'subject_type')} AND {_type_ok(ot, 'object_type')})"
+        # F6 (dedup.py:178-206): an invalid row whose reversal is valid swaps
+        should_swap = (
+            f"(NOT {valid_asis} AND {_type_ok(st, 'object_type')}"
+            f" AND {_type_ok(ot, 'subject_type')})"
         )
-        .withColumn(
-            "_o", F.when(should_swap, F.col("subject_id")).otherwise(F.col("object_id"))
-        )
-        .withColumn("subject_id", F.col("_s"))
-        .withColumn("object_id", F.col("_o"))
-        .drop("_s", "_o", "_keep")
-    )
+        keep[row["predicate"]] = f"{valid_asis} OR {should_swap}"
+        swap[row["predicate"]] = should_swap
+        neg_specificity[row["predicate"]] = str(-row["specificity"])
+    do_swap = F.expr(_by_predicate(swap))
+    subject = F.when(do_swap, F.col("object_id")).otherwise(F.col("subject_id"))
+    obj = F.when(do_swap, F.col("subject_id")).otherwise(F.col("object_id"))
 
     # F8: per (doc, subject, object) keep the most specific predicate
     # (relationships.py:55-74; ties → max confidence, then predicate asc,
@@ -75,17 +98,21 @@ def validate_relations(resolved: DataFrame, spec: DataFrame) -> DataFrame:
     # partial aggregation, no per-partition sort. min over
     # (-specificity, -confidence, predicate, evidence) == (spec DESC,
     # conf DESC, pred ASC, evidence ASC).
-    ev = F.col("evidence") if "evidence" in r.columns else F.lit("")
-    grouped = r.groupBy("doc_id", "subject_id", "object_id").agg(
-        F.min(
-            F.struct(
-                (-F.col("specificity")).alias("nspec"),
-                (-F.col("confidence")).alias("nconf"),
-                F.col("predicate").alias("predicate"),
-                ev.alias("evidence"),
-                F.col("confidence").alias("confidence"),
-            )
-        ).alias("_w")
+    ev = F.col("evidence") if "evidence" in resolved.columns else F.lit("")
+    grouped = (
+        resolved.filter(F.expr(_by_predicate(keep)))
+        .groupBy("doc_id", subject.alias("subject_id"), obj.alias("object_id"))
+        .agg(
+            F.min(
+                F.struct(
+                    F.expr(_by_predicate(neg_specificity)).alias("nspec"),
+                    (-F.col("confidence")).alias("nconf"),
+                    F.col("predicate").alias("predicate"),
+                    ev.alias("evidence"),
+                    F.col("confidence").alias("confidence"),
+                )
+            ).alias("_w")
+        )
     )
     return grouped.select(
         "doc_id",
@@ -345,22 +372,22 @@ def cooccurrence_accumulated(
 
 def symmetric_order(triples: DataFrame, spec: DataFrame) -> DataFrame:
     """F11: symmetric predicates stored as (least, greatest)
-    (examples/medlit/pipeline/utils.py:4-10) — built-in least/greatest."""
-    sym = F.broadcast(spec.select("predicate", "symmetric"))
-    t = triples.join(sym, "predicate", "left").withColumn(
-        "_sym", F.coalesce(F.col("symmetric"), F.lit(False))
-    )
-    s = F.when(F.col("_sym"), F.least("subject_id", "object_id")).otherwise(F.col("subject_id"))
-    o = F.when(F.col("_sym"), F.greatest("subject_id", "object_id")).otherwise(F.col("object_id"))
-    # compute both into fresh columns before replacing — a chained
-    # withColumn("subject_id", ...) would feed the already-rewritten subject
-    # into greatest() and collapse the pair into a self-loop
-    return (
-        t.withColumn("_s2", s)
-        .withColumn("_o2", o)
-        .drop("subject_id", "object_id", "symmetric", "_sym")
-        .withColumnRenamed("_s2", "subject_id")
-        .withColumnRenamed("_o2", "object_id")
+    (examples/medlit/pipeline/utils.py:4-10) — built-in least/greatest.
+    The spec's symmetric predicates are collected (a local relation: no
+    Spark job) and inlined as an isin; predicates outside the spec keep
+    their order. Columns keep their input order."""
+    sym = [r["predicate"] for r in spec.select("predicate", "symmetric").collect() if r["symmetric"]]
+    if not sym:
+        return triples
+    is_sym = f"predicate IN ({', '.join(map(_sql_str, sym))})"
+    # both ends are computed from the input columns in one projection, so
+    # greatest() never sees an already-rewritten subject
+    ordered = {
+        "subject_id": f"CASE WHEN {is_sym} THEN least(subject_id, object_id) ELSE subject_id END",
+        "object_id": f"CASE WHEN {is_sym} THEN greatest(subject_id, object_id) ELSE object_id END",
+    }
+    return triples.select(
+        *[F.expr(ordered[c]).alias(c) if c in ordered else c for c in triples.columns]
     )
 
 

@@ -72,20 +72,22 @@ def resolve_mentions(mentions: DataFrame, alias_index: DataFrame) -> DataFrame:
     path: join keys cost zero JVM regex); falls back to the column
     expression for generic inputs. Misses fall back to hint then content
     hash (keeps the operator total)."""
-    idx = F.broadcast(alias_index.withColumnRenamed("entity_type", "_idx_type"))
+    idx = F.broadcast(
+        alias_index.select(F.col("norm_key").alias("_key"), F.col("entity_id").alias("_idx_id"))
+    )
     if "norm_text" in mentions.columns:
-        src = mentions.withColumnRenamed("norm_text", "_norm")
+        norm = F.col("norm_text")
     else:
-        src = mentions.withColumn("_norm", norm_dedup_col(F.col("text")))
-    joined = src.join(idx, F.col("_norm") == idx["norm_key"], "left")
-    return joined.withColumn(
-        "entity_id",
-        F.coalesce(
-            idx["entity_id"],
-            F.col("canonical_id_hint"),
-            prov_id_col(F.col("text"), F.col("entity_type")),
-        ),
-    ).drop("norm_key", "_idx_type", "_norm")
+        norm = norm_dedup_col(F.col("text"))
+    entity_id = F.coalesce(
+        F.col("_idx_id"),
+        F.col("canonical_id_hint"),
+        prov_id_col(F.col("text"), F.col("entity_type")),
+    )
+    return mentions.join(idx, norm == F.col("_key"), "left").select(
+        *[c for c in mentions.columns if c not in ("norm_text", "entity_id")],
+        entity_id.alias("entity_id"),
+    )
 
 
 def resolve_relation_endpoints(raw_relations: DataFrame, alias_index: DataFrame) -> DataFrame:

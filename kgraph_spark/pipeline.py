@@ -6,7 +6,7 @@
       → raw pattern relations (pUDF)                   [no shuffle]
       → resolved relations (broadcast joins)           [no shuffle]
       → SAME_AS connected components → merge map       [tiny iterative]
-      → validated relations (swap/constraints/F8)      [per-doc window]
+      → validated relations (swap/constraints/F8)      [one (doc,s,o) shuffle]
       → appears_in triples + symmetric ordering
         + cross-doc accumulation                       [one (s,p,o) shuffle]
       → co-occurrence pairs, dictionary-encoded and
@@ -23,10 +23,33 @@ are the triple accumulation and the co-occurrence accumulation (plus the
 tiny CC loop over merge edges).
 
 Extraction is the only layer that runs Python. The driver-built dimensions
-(alias index, predicate spec, SAME_AS merge map) are JVM local relations
-(session.local_frame), so resolution, canonicalization, validation and
-accumulation are plain broadcast joins and aggregates that start no Python
-worker.
+(alias index, SAME_AS merge map) are JVM local relations
+(session.local_frame), so resolution, canonicalization and accumulation are
+plain broadcast joins and aggregates that start no Python worker; the
+predicate spec is inlined into validation and symmetric ordering as
+expressions, so nothing joins it.
+
+Plan inventory of run_pipeline_from_extracted + export.write_bundle, per
+refresh. Every intermediate two branches read is persisted and computed
+once:
+  * persisted: resolved relations (read by the SAME_AS edges and by
+    validation), the merge map, the merged mentions carrying their
+    pre-merge id (entities, tombstones, appears_in, mentions table), and
+    the validated, merged, symmetric-ordered relations (relationships
+    per-doc branch, evidence table);
+  * extraction scans: 'r' rows once, 'm' rows once, 'p' rows twice (the
+    co-occurrence window sets and its code dictionary);
+  * shuffles: SAME_AS edge distinct, F8 (doc, s, o) election, entity
+    summary, tombstone summary, appears_in distinct, (s,p,o)
+    accumulation, and the co-occurrence branch's window sets, doc sets,
+    pair-code accumulation and code dictionary;
+  * broadcasts: the alias index (relation endpoints, mentions, presence),
+    the merge map (mentions, both relation endpoints, presence) and the
+    code dictionary (decode of both pair ends); each is one Spark job at
+    most, and repeats within one plan reuse the first.
+With AQE off a warm refresh runs 14 Spark jobs at local[2] and 15 at
+local[8], where the merge-map collect takes one more take() round
+(tests/test_plan_budget.py pins the count and the per-table exchanges).
 """
 
 from __future__ import annotations
@@ -45,6 +68,9 @@ from kgraph_spark.operators.mentions import (
     relations_from_extracted,
 )
 
+# the merged mentions' column holding each mention's pre-merge entity id
+PRE_MERGE_ID = "pre_merge_id"
+
 
 @dataclass
 class PipelineResult:
@@ -57,9 +83,11 @@ class PipelineResult:
     # stays the caller's to release
     extracted: DataFrame | None = None
     tables: dict[str, DataFrame] = field(default_factory=dict)
+    # the shared intermediates run_pipeline_from_extracted persisted
+    persisted: list[DataFrame] = field(default_factory=list)
 
     def unpersist(self) -> None:
-        for df in (self.extracted, self.mentions, self.merge_mapping):
+        for df in (self.extracted, *self.persisted):
             if df is not None:
                 try:
                     df.unpersist()
@@ -113,25 +141,40 @@ def run_pipeline_from_extracted(
     extraction shards and continues here; perfbench's graph_refresh reads
     a committed extraction table).
 
-    The caller owns `extracted`: the result's unpersist() releases only the
-    frames persisted here (merged mentions and the merge map)."""
+    Each intermediate that two branches read is computed once and
+    persisted: the resolved relations (SAME_AS edges and validation), the
+    validated, merged relations (the relationships per-doc branch and the
+    evidence table), and the merged mentions, which keep their pre-merge id
+    so the merge losers' tombstones need no second pass. The caller owns
+    `extracted`: the result's unpersist() releases only the frames persisted
+    here."""
     cfg = cfg or PipelineConfig()
     alias_index = resolve.alias_index_df(spark, gazetteer_rows)
     spec = relationships.predicate_spec_df(spark)
-    mentions = resolve.resolve_mentions(mentions_from_extracted(extracted), alias_index)
     resolved_rel = resolve.resolve_relation_endpoints(
         relations_from_extracted(extracted), alias_index
-    )
+    ).persist()
 
     # ---- pass 2a: canonical merge (D8 connected components) --------------
     edges = relationships.same_as_edges(resolved_rel, cfg)
     mapping = canonicalize.merge_mapping(edges, cfg.cc_max_iterations).persist()
 
-    merged_mentions = canonicalize.apply_merge(mentions, mapping, "entity_id").persist()
+    pre_merge = resolve.resolve_mentions(mentions_from_extracted(extracted), alias_index)
+    mentions_merged_from = canonicalize.apply_merge(
+        pre_merge.select("*", F.col("entity_id").alias(PRE_MERGE_ID)), mapping, "entity_id"
+    ).persist()
+    merged_mentions = mentions_merged_from.drop(PRE_MERGE_ID)
 
     # ---- pass 2b: relation validation + per-doc triples -------------------
-    validated = relationships.validate_relations(resolved_rel, spec)
-    validated = canonicalize.apply_merge(validated, mapping, "subject_id", "object_id")
+    validated = canonicalize.apply_merge(
+        relationships.validate_relations(resolved_rel, spec), mapping, "subject_id", "object_id"
+    )
+    per_doc_rel = relationships.symmetric_order(
+        validated.select(
+            "doc_id", "subject_id", "predicate", "object_id", "confidence", "evidence"
+        ),
+        spec,
+    ).persist()
 
     # co-occurrence presence comes from the RAW-occurrence 'p' rows (every
     # occurrence counts — reference window-re-scan semantics), not from the
@@ -141,11 +184,10 @@ def run_pipeline_from_extracted(
         mapping,
         "entity_id",
     )
-    appear = relationships.appears_in_triples(merged_mentions, cfg)
-    no_quote = F.lit(None).cast("string").alias("evidence")
-    per_doc = validated.select(
-        "doc_id", "subject_id", "predicate", "object_id", "confidence", "evidence"
-    ).unionByName(appear.select("*", no_quote))
+    appear = relationships.appears_in_triples(merged_mentions, cfg).select(
+        "*", F.lit(None).cast("string").alias("evidence")
+    )
+    per_doc = per_doc_rel.unionByName(relationships.symmetric_order(appear, spec))
 
     # ---- pass 3: accumulation + export tables -----------------------------
     n_salts = cfg.accumulate_n_salts
@@ -164,10 +206,9 @@ def run_pipeline_from_extracted(
         n_salts = cfg.auto_n_salts if big else 0
     if n_salts:
         # hot-pair guard: per-salt capped partials bound reducer state
-        def _accumulate(df, max_src):
-            return relationships.accumulate_triples_salted(df, max_src, n_salts)
+        acc = relationships.accumulate_triples_salted(per_doc, cfg.max_source_documents, n_salts)
     else:
-        _accumulate = relationships.accumulate_triples
+        acc = relationships.accumulate_triples(per_doc, cfg.max_source_documents)
     # co_occurs_with shares no (s,p,o) group with the other branches
     # (disjoint predicates), so its F1+F10 run fused and dictionary-encoded
     # (relationships.cooccurrence_accumulated) — the dominant pair stream
@@ -175,41 +216,27 @@ def run_pipeline_from_extracted(
     acc_cooc = relationships.cooccurrence_accumulated(
         presence, cfg, cfg.max_source_documents
     )
-    per_doc = relationships.symmetric_order(per_doc, spec)
-    triples = _accumulate(
-        per_doc, cfg.max_source_documents
-    ).unionByName(
-        acc_cooc.withColumn(
-            "evidence_confidence_avg", F.lit(None).cast("double")
-        ).withColumn("strongest_evidence_quote", F.lit(None).cast("string"))
-    )
-    entities = export.entities_table(
-        merged_mentions,
-        cfg.promotion,
-        max_supporting_documents=cfg.max_supporting_documents,
-        max_synonyms=cfg.max_synonyms,
-    ).unionByName(
-        # D12 tombstones: merge losers stay queryable with merged_into
-        export.tombstone_entities(
-            mentions,
-            mapping,
-            max_supporting_documents=cfg.max_supporting_documents,
-            max_synonyms=cfg.max_synonyms,
+    triples = acc.unionByName(
+        acc_cooc.select(
+            "*",
+            F.lit(None).cast("double").alias("evidence_confidence_avg"),
+            F.lit(None).cast("string").alias("strongest_evidence_quote"),
         )
+    )
+    ent_caps = {
+        "max_supporting_documents": cfg.max_supporting_documents,
+        "max_synonyms": cfg.max_synonyms,
+    }
+    entities = export.entities_table(merged_mentions, cfg.promotion, **ent_caps).unionByName(
+        # D12 tombstones: merge losers stay queryable with merged_into
+        export.tombstones_of_merged(mentions_merged_from, PRE_MERGE_ID, **ent_caps)
     )
 
     tables = {
         "entities": entities,
         "relationships": triples,
         "mentions": export.mentions_table(merged_mentions),
-        "evidence": export.evidence_table(
-            relationships.symmetric_order(
-                validated.select(
-                    "doc_id", "subject_id", "predicate", "object_id", "confidence", "evidence"
-                ),
-                spec,
-            )
-        ),
+        "evidence": export.evidence_table(per_doc_rel),
     }
     return PipelineResult(
         mentions=merged_mentions,
@@ -217,4 +244,5 @@ def run_pipeline_from_extracted(
         triples=triples,
         entities=entities,
         tables=tables,
+        persisted=[resolved_rel, mapping, mentions_merged_from, per_doc_rel],
     )

@@ -16,10 +16,12 @@ from pyspark.sql import types as T
 
 # Generated-code cache size (static conf: only read when the JVM's code
 # generator first loads). One pass of the graph layers (resolve → canonicalize
-# → validate → co-occurrence → accumulate → export) compiles 130-135 distinct
-# classes, measured at local[2] with AQE off: 14 in plan build and the
-# merge-map collect, 36 in the entities write, 74 in relationships, 7 in
-# evidence, 3 in mentions. Spark's default of 100 cannot hold one pass, so a
+# → validate → co-occurrence → accumulate → export) compiles 130-140 distinct
+# classes, measured at local[2] with AQE off over 500 docs: 18 in plan build
+# and the merge-map collect (which also fills the persisted resolved
+# relations), 37 in the entities write (which fills the persisted merged
+# mentions), 76 in relationships (the persisted validated relations), 3 in
+# mentions, 3 in evidence. Spark's default of 100 cannot hold one pass, so a
 # warm rerun recompiled 85-100 of them (101-122 at local[8]) and the JIT
 # compiled the new bytecode again. Guava splits this cache into segments that
 # evict independently, each at its share of the cap, so an unevenly hashed
@@ -40,6 +42,12 @@ SESSION_CONF = {
     # broadcast threshold: KB dict / constraint dims are ≤ few MB
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+    # DataFrame call-site capture off. With it on, every pyspark.sql.functions
+    # call walks the Python stack and records the call site in the JVM: about
+    # 11 extra py4j round trips per call, ~3,400 of a graph refresh's ~6,300
+    # (measured at local[2]). The price: an error raised by the DataFrame API
+    # no longer names the Python line that built the failing expression.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -78,16 +78,42 @@ def test_kill_and_resume(spark, tmp_path):
     assert [json.loads(r["counters_json"]) for r in metrics] == [manifest["counts"]]
 
 
+def _bundle_files(out: str) -> dict:
+    return {str(p): p.stat().st_mtime_ns for p in Path(out).rglob("*") if p.is_file()}
+
+
 def test_rerun_is_idempotent(spark, tmp_path):
+    """A rerun over the same committed shards and gazetteer returns the
+    bundle's manifest without a Spark job or a rewritten file; a changed
+    gazetteer rebuilds the bundle."""
     docs = synth.documents_df(spark, 60)
     gaz = synth.gazetteer_rows()
     workdir = str(tmp_path / "ckpt2")
     out = str(tmp_path / "bundle")
+    sc = spark.sparkContext
     m1 = checkpointed_pipeline(spark, docs, gaz, workdir, out, n_shards=4)
-    m2 = checkpointed_pipeline(spark, docs, gaz, workdir, out, n_shards=4)
-    assert m2["counts"] == m1["counts"]
+    files = _bundle_files(out)
+    try:
+        sc.setJobGroup("rerun-finished", "checkpointed_pipeline rerun")
+        m2 = checkpointed_pipeline(spark, docs, gaz, workdir, out, n_shards=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert m2 == m1
+    assert _settled_job_count(sc, "rerun-finished") == 0
+    assert _bundle_files(out) == files
     assert spark.read.parquet(out + "/relationships").count() == m1["counts"]["relationships"]
-    # second run added no lineage rows (nothing recomputed)
+    # second run added no lineage rows and no metrics row (nothing recomputed)
+    assert read_lineage(spark, workdir).count() == 4
+    assert spark.read.parquet(str(Path(workdir) / "metrics")).count() == 1
+
+    changed = [(alias, cid, etype, round(conf - 0.01, 2)) for alias, cid, etype, conf in gaz]
+    m3 = checkpointed_pipeline(spark, docs, changed, workdir, out, n_shards=4)
+    assert m3["inputs"]["gazetteer"] != m1["inputs"]["gazetteer"]
+    assert m3["inputs"]["extracted_lineage"] == m1["inputs"]["extracted_lineage"]
+    # every table rewritten: its part files carry a new write's id
+    parts = {k for k in _bundle_files(out) if "/part-" in k}
+    assert parts and parts.isdisjoint(files)
+    assert json.loads((Path(out) / "manifest.json").read_text()) == m3
     assert read_lineage(spark, workdir).count() == 4
 
 
