@@ -7127,7 +7127,9 @@ def _hits_oracle_sql(iterations: int = 3) -> str:
     """Unrolled HITS with L∞ normalization over the C/S→N⇄R graph —
     ordered folds for the incoming sums (list_sum ORDER BY counterpart ≡
     hits(exact_fold=True)), max() for the normalizers (order-independent),
-    round-6 everywhere: both engines walk the identical trajectory."""
+    round-6 everywhere: both engines walk the identical trajectory. Each
+    round's CTEs are MATERIALIZED: inlined, every round re-derived the one
+    before it four times over (16 s for 190 rows at sf0.001)."""
     parts = ["""
             WITH e AS (
                 SELECT DISTINCT * FROM (
@@ -7143,20 +7145,20 @@ def _hits_oracle_sql(iterations: int = 3) -> str:
                 SELECT node, 1.0::DOUBLE AS hub FROM nodes
             )"""]
     for i in range(1, iterations + 1):
-        parts.append(f""", ar{i} AS (
+        parts.append(f""", ar{i} AS MATERIALIZED (
                 SELECT e.dst AS node,
                        round(list_sum(list(h.hub ORDER BY e.src)), 6) AS s
                 FROM e JOIN h{i - 1} h ON e.src = h.node GROUP BY e.dst
-            ), a{i} AS (
+            ), a{i} AS MATERIALIZED (
                 SELECT nd.node,
                        round(coalesce(ar.s, 0.0::DOUBLE)
                              / (SELECT max(s) FROM ar{i}), 6) AS authority
                 FROM nodes nd LEFT JOIN ar{i} ar ON nd.node = ar.node
-            ), hr{i} AS (
+            ), hr{i} AS MATERIALIZED (
                 SELECT e.src AS node,
                        round(list_sum(list(a.authority ORDER BY e.dst)), 6) AS s
                 FROM e JOIN a{i} a ON e.dst = a.node GROUP BY e.src
-            ), h{i} AS (
+            ), h{i} AS MATERIALIZED (
                 SELECT nd.node,
                        round(coalesce(hr.s, 0.0::DOUBLE)
                              / (SELECT max(s) FROM hr{i}), 6) AS hub
@@ -8393,10 +8395,12 @@ def oracle_sql() -> dict[str, str]:
                        x.sig AS sig_a, y.sig AS sig_b
                 FROM banded x JOIN banded y
                   ON x.b = y.b AND x.bkey = y.bkey AND x.doc_id < y.doc_id
-            ), pairs AS (
+            -- pairs and edges MATERIALIZED: inlined, the recursive reach
+            -- re-derived the shingle self-join on every round
+            ), pairs AS MATERIALIZED (
                 SELECT doc_a, doc_b FROM cand
                 WHERE len(list_filter(range(1, 65), i -> sig_a[i] = sig_b[i])) / 64.0 >= 0.5
-            ), edges AS (
+            ), edges AS MATERIALIZED (
                 SELECT doc_a AS s, doc_b AS d FROM pairs
                 UNION
                 SELECT doc_b AS s, doc_a AS d FROM pairs
@@ -9806,12 +9810,14 @@ def oracle_sql() -> dict[str, str]:
                 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
                 FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
                 GROUP BY 1, 2
-            ), pairs AS (
+            -- pairs and edges MATERIALIZED: inlined, the recursive reach
+            -- re-derived the shingle self-join on every round
+            ), pairs AS MATERIALIZED (
                 SELECT doc_a, doc_b FROM inter
                 JOIN sz sa ON sa.doc_id = doc_a
                 JOIN sz sb ON sb.doc_id = doc_b
                 WHERE i::DOUBLE / (sa.sz + sb.sz - i) >= 0.5
-            ), edges AS (
+            ), edges AS MATERIALIZED (
                 SELECT doc_a AS s, doc_b AS d FROM pairs
                 UNION ALL
                 SELECT doc_b, doc_a FROM pairs
@@ -10002,12 +10008,14 @@ def oracle_sql() -> dict[str, str]:
                 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
                 FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
                 GROUP BY 1, 2
-            ), pairs AS (
+            -- pairs and edges MATERIALIZED: inlined, the recursive reach
+            -- re-derived the shingle self-join on every round
+            ), pairs AS MATERIALIZED (
                 SELECT doc_a, doc_b FROM inter
                 JOIN sz sa ON sa.doc_id = doc_a
                 JOIN sz sb ON sb.doc_id = doc_b
                 WHERE i::DOUBLE / (sa.sz + sb.sz - i) >= 0.5
-            ), edges AS (
+            ), edges AS MATERIALIZED (
                 SELECT doc_a AS s, doc_b AS d FROM pairs
                 UNION ALL
                 SELECT doc_b, doc_a FROM pairs
@@ -11320,14 +11328,19 @@ def oracle_sql() -> dict[str, str]:
                 SELECT doc_id AS origin, w AS walk_idx
                 FROM documents, (SELECT unnest(range(2)) AS w) WHERE doc_id < 12
             ), nxt AS (
-                SELECT e.src, i.origin, i.walk_idx, st.step,
-                       (min({'h': md5(i.origin::VARCHAR || '|' || i.walk_idx::VARCHAR
-                                      || '|' || st.step::VARCHAR || '|'
-                                      || e.src::VARCHAR || '|' || e.dst::VARCHAR),
-                             'd': e.dst})).d AS dst
+                -- hash-argmin per (src, origin, walk, step) as a ranked
+                -- QUALIFY: a min() over a {hash, dst} struct with 60k groups
+                -- peaks at ~5 GB RSS in DuckDB for a 60k-row result
+                SELECT e.src, i.origin, i.walk_idx, st.step, e.dst
                 FROM e CROSS JOIN init i
                 CROSS JOIN (SELECT unnest(range(1, 6)) AS step) st
-                GROUP BY 1, 2, 3, 4
+                QUALIFY row_number() OVER (
+                    PARTITION BY e.src, i.origin, i.walk_idx, st.step
+                    ORDER BY md5(i.origin::VARCHAR || '|' || i.walk_idx::VARCHAR
+                                 || '|' || st.step::VARCHAR || '|'
+                                 || e.src::VARCHAR || '|' || e.dst::VARCHAR),
+                             e.dst
+                ) = 1
             ), walk(origin, walk_idx, step, cur, path) AS (
                 SELECT origin, walk_idx, 0, origin, [origin] FROM init
                 UNION ALL

@@ -22,7 +22,9 @@ TABLES = [
 
 @pytest.fixture(scope="module")
 def con():
-    c = duckdb.connect()
+    # the oracles share the pytest process with the Spark driver's JVM: cap
+    # DuckDB's buffer pool and threads (every oracle peaks under 700 MB RSS)
+    c = duckdb.connect(config={"memory_limit": "2GB", "threads": 2})
     for t in TABLES:
         c.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
     return c
