@@ -178,11 +178,13 @@ def medlit_pass2_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     if the reference corpus is not mounted."""
     import os
 
+    from kgraph_spark.session import local_frame
+
     bundles = "/root/reference/pass1_bundles"
     cache = "/root/reference/pass1_vocab/seeded_synonym_cache.json"
     if not (os.path.isdir(bundles) and os.path.isfile(cache)):
-        return spark.createDataFrame(
-            [], "subject string, predicate string, object string, confidence double"
+        return local_frame(
+            spark, [], "subject string, predicate string, object string, confidence double"
         )
     from kgraph_spark.operators.medlit_pass2 import run_pass2
 
@@ -200,11 +202,13 @@ def medlit_pass3_relationships(spark: SparkSession, sf_dir: str) -> DataFrame:
     medlit_pass2_triples."""
     import os
 
+    from kgraph_spark.session import local_frame
+
     bundles_dir = "/root/reference/pass1_bundles"
     cache = "/root/reference/pass1_vocab/seeded_synonym_cache.json"
     if not (os.path.isdir(bundles_dir) and os.path.isfile(cache)):
-        return spark.createDataFrame(
-            [], "subject_id string, predicate string, object_id string, evidence_count long"
+        return local_frame(
+            spark, [], "subject_id string, predicate string, object_id string, evidence_count long"
         )
     from kgraph_spark.operators.medlit_pass2 import run_pass2
     from kgraph_spark.operators.medlit_pass3 import build_bundle_tables
@@ -231,6 +235,7 @@ def q_medlit_bundle_stats(spark, sf_dir):
     import os
 
     from kgraph_spark.operators.medlit_pass2 import with_authoritative_id
+    from kgraph_spark.session import local_frame
     from kgraph_spark.sources.medlit_bundles import (
         bundle_entities,
         bundle_relationships,
@@ -238,7 +243,8 @@ def q_medlit_bundle_stats(spark, sf_dir):
     )
 
     if not os.path.isdir(_MEDLIT_BUNDLES):
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "paper_id string, n_entities long, n_relationships long, "
             "n_evidence long, n_same_as_merged long, n_auth long",
@@ -283,11 +289,12 @@ def q_medlit_auth_ids(spark, sf_dir):
     import os
 
     from kgraph_spark.operators.medlit_pass2 import with_authoritative_id
+    from kgraph_spark.session import local_frame
     from kgraph_spark.sources.medlit_bundles import bundle_entities, read_bundles
 
     if not os.path.isdir(_MEDLIT_BUNDLES):
-        return spark.createDataFrame(
-            [], "paper_id string, local_id string, entity_class string, auth_id string"
+        return local_frame(
+            spark, [], "paper_id string, local_id string, entity_class string, auth_id string"
         )
     e = with_authoritative_id(bundle_entities(read_bundles(spark, _MEDLIT_BUNDLES)))
     return (
@@ -2533,6 +2540,7 @@ def q_d12_tombstones(spark, sf_dir):
     synonym arrays use the capped sorted deterministic prefix (caps chosen
     to BIND here so the scale guard itself is oracle-checked)."""
     from kgraph_spark.operators.export import tombstone_entities
+    from kgraph_spark.session import local_frame
 
     orders = _read(spark, sf_dir, "orders")
     ok = F.col("o_orderkey")
@@ -2544,8 +2552,8 @@ def q_d12_tombstones(spark, sf_dir):
         ok.cast("int").alias("start_offset"),
         F.concat(F.lit("T"), ((ok % 20) % 3).cast("string")).alias("entity_type"),
     )
-    mapping = spark.createDataFrame(
-        [(f"E{i}", f"E{i + 10}") for i in range(10)], "entity_id string, final_id string"
+    mapping = local_frame(
+        spark, [(f"E{i}", f"E{i + 10}") for i in range(10)], "entity_id string, final_id string"
     )
     return tombstone_entities(
         mentions, mapping, max_supporting_documents=5, max_synonyms=3
@@ -4631,22 +4639,26 @@ def q_kg_rdfs_entailment(spark, sf_dir):
     broadcast, the instance side never shuffles before the final
     (entity, type) aggregate."""
     from kgraph_spark.operators.validation_extra import rdfs_entailment
+    from kgraph_spark.session import local_frame
 
-    subclass = spark.createDataFrame(
+    subclass = local_frame(
+        spark,
         [("Customer", "Party"), ("Supplier", "Party"),
          ("Party", "LegalEntity"), ("Part", "Product")],
         "child string, parent string",
     )
-    subprop = spark.createDataFrame(
-        [("supplied_by", "sourced_from")], "child string, parent string"
+    subprop = local_frame(
+        spark, [("supplied_by", "sourced_from")], "child string, parent string"
     )
-    domains = spark.createDataFrame(
+    domains = local_frame(
+        spark,
         [("placed_by", "Order"), ("located_in", "Party"),
          ("contains", "Order"), ("supplied_by", "Part"),
          ("sourced_from", "Product")],
         "predicate string, cls string",
     )
-    ranges = spark.createDataFrame(
+    ranges = local_frame(
+        spark,
         [("placed_by", "Customer"), ("located_in", "Nation"),
          ("contains", "Part"), ("supplied_by", "Supplier"),
          ("sourced_from", "Organization")],
@@ -4987,6 +4999,7 @@ def q_graph_temporal_reach(spark, sf_dir):
     than it arrived; pure integer min-folds, 4 pinned rounds; the
     oracle re-derives arrivals with a depth-bounded recursive CTE."""
     from kgraph_spark.operators.temporal import temporal_reachability
+    from kgraph_spark.session import local_frame
 
     docs = _read(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     d = F.col("doc_id")
@@ -4994,7 +5007,7 @@ def q_graph_temporal_reach(spark, sf_dir):
                      ((d % 7) * 3).alias("t"))
     e2 = docs.select(d.alias("src"), ((d + 11) % 50).alias("dst"),
                      ((d % 5) * 5 + 1).alias("t"))
-    seeds = spark.createDataFrame([(0, 0), (25, 2)], "node long, t0 long")
+    seeds = local_frame(spark, [(0, 0), (25, 2)], "node long, t0 long")
     return temporal_reachability(e1.unionByName(e2), seeds, max_hops=4)
 
 

@@ -134,8 +134,16 @@ def merge_mapping(
     union-find on the driver in one pass — this removes ~2·iterations Spark
     actions from the critical path. Above it, the distributed hash-to-min
     loop handles arbitrarily large graphs (each round: one join + one
-    groupBy over the edge set only)."""
-    head = same_as_edges.limit(local_threshold + 1).collect()
+    groupBy over the edge set only).
+
+    The probe is one Spark job: a root limit's take() loop runs a job per
+    round of partitions (three over 8), so the edges are coalesced to one
+    partition and the first round reads them all; the edge distinct's
+    final merge then runs as one task, cheap for merge-signal edge sets.
+    The limit stays the root because a limit inside a generated stage
+    gets a new counter name per plan, and every refresh would recompile
+    it."""
+    head = same_as_edges.coalesce(1).limit(local_threshold + 1).collect()
     if len(head) <= local_threshold:
         return _merge_mapping_local([(r["src"], r["dst"]) for r in head], same_as_edges.sparkSession)
     labels = connected_components(same_as_edges, max_iterations)

@@ -13,6 +13,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgraph_spark.session import local_frame
+
 # reference kgserver/query/graph_traversal.py:20-23
 MAX_HOPS = 5
 MAX_NODES_LIMIT = 2000
@@ -154,7 +156,7 @@ def run_bfs_query(
     semantics; an id prefix is not a type). Nodes absent from the dimension
     are stubs when a filter is active."""
     spark = edges.sparkSession
-    seeds = spark.createDataFrame([(s,) for s in query["seeds"]], "entity_id string")
+    seeds = local_frame(spark, [(s,) for s in query["seeds"]], "entity_id string")
     nodes = bfs_subgraph(
         edges,
         seeds,

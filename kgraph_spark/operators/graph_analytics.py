@@ -49,6 +49,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgraph_spark.session import local_frame
+
 
 def degree_table(edges: DataFrame, src: str = "subject_id", dst: str = "object_id") -> DataFrame:
     """(node, out_degree, in_degree, degree) over a directed edge list.
@@ -1617,9 +1619,7 @@ def rich_club(
         .groupBy("k")
         .agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
     )
-    grid = und.sparkSession.createDataFrame(
-        [(int(k),) for k in sorted(set(k_grid))], "k int"
-    )
+    grid = local_frame(und.sparkSession, [(int(k),) for k in sorted(set(k_grid))], "k int")
     out = (
         grid.join(nodes_k, "k", "left")
         .join(edges_k, "k", "left")

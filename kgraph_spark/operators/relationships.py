@@ -813,9 +813,7 @@ def conflicting_triples(
         raise ValueError("conflict_pairs must be non-empty")
     spark = triples.sparkSession
     conf = F.broadcast(
-        spark.createDataFrame(
-            [(a, b) for a, b in conflict_pairs], "pred_a string, pred_b string"
-        )
+        local_frame(spark, [(a, b) for a, b in conflict_pairs], "pred_a string, pred_b string")
     )
     preds = sorted({p for ab in conflict_pairs for p in ab})
     counts = (

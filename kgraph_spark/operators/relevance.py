@@ -480,13 +480,18 @@ def mmr_topk(
     to round-6 FIXED-POINT longs, λ is the rational lam_num/lam_denom so
     the marginal score lam_num·rel − (lam_denom−lam_num)·maxsim is EXACT
     integer arithmetic (scale-invariant argmax — never divided), and every
-    argmax is min-of-struct((−score, id)) — the repo's replayable-election
-    trick. k is a fixed unroll: each round joins candidates to the ≤(k−1)
-    already-selected rows per group (bounded), takes one max aggregate and
-    one argmax — pure lineage, SQL-replayable round by round. Relevance =
-    cosine(item, the group's probe vector from `probes` (group, vec)).
-    At scale: probes broadcast; per-round state is O(groups·k); candidate
-    rows shuffle once on group."""
+    argmax is the least (−score, id) — the repo's replayable-election
+    trick. Relevance = cosine(item, the group's probe vector from `probes`
+    (group, vec)); the first pick is pure relevance.
+
+    k is a fixed unroll over ONE per-candidate state (rank if picked, max
+    similarity to the picks so far): each round is one group window that
+    elects the best open candidate and hands its vector to every row of
+    the group, which folds its similarity into the running max. A round
+    reads the previous state once, so the plan grows linearly in k, pure
+    lineage and SQL-replayable round by round. At scale: probes broadcast;
+    candidate rows shuffle once on group and stay partitioned for every
+    round."""
     if k < 1 or not 0 < lam_num <= lam_denom:
         raise ValueError("need k >= 1 and 0 < lam_num <= lam_denom")
     from kgraph_spark.operators.similarity import cosine_fixed
@@ -512,56 +517,48 @@ def mmr_topk(
             .alias("_rel"),
         )
     )
-    sel = (
-        cand.groupBy("_g")
-        .agg(F.min(F.struct((-F.col("_rel")).alias("s"), F.col("_i").alias("i"))).alias("_m"))
-        .select("_g", F.col("_m.i").alias("_i"), F.lit(1).alias("rank"))
-        .join(cand.select("_g", "_i", "_v", "_rel"), ["_g", "_i"])
+    state = cand.select(
+        "_g",
+        "_i",
+        "_v",
+        "_rel",
+        F.lit(None).cast("int").alias("rank"),
+        F.lit(None).cast("long").alias("_maxsim"),
     )
-    selected = sel.select("_g", "_i", "_v", "_rel", "rank")
-    for r in range(2, k + 1):
-        done = selected.select(F.col("_g").alias("_dg"), F.col("_i").alias("_done"))
-        pool = cand.join(
-            done,
-            (cand["_g"] == done["_dg"]) & (cand["_i"] == done["_done"]),
-            "left_anti",
+    lam_rest = lam_denom - lam_num
+    for r in range(1, k + 1):
+        score = (
+            F.col("_rel")
+            if r == 1
+            else F.lit(lam_num) * F.col("_rel") - F.lit(lam_rest) * F.col("_maxsim")
         )
-        selvecs = selected.select(F.col("_g").alias("_g2"), F.col("_v").alias("_sv"))
-        sims = (
-            pool.join(selvecs, pool["_g"] == selvecs["_g2"])
-            .select(
-                pool["_g"].alias("_g"),
-                pool["_i"].alias("_i"),
-                pool["_v"].alias("_v"),
-                pool["_rel"].alias("_rel"),
-                F.round(cosine_fixed(pool["_v"], selvecs["_sv"]) * scale)
-                .cast("long")
-                .alias("_sim"),
+        # open candidates first, then the least (−score, id): the first row
+        # of the window is the round's pick unless the group has no open row
+        w = Window.partitionBy("_g").orderBy(
+            F.col("rank").isNotNull(),
+            F.struct((-score).alias("s"), F.col("_i").alias("i")),
+        ).rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        best = F.first(
+            F.struct(
+                F.col("rank").isNull().alias("open"),
+                F.col("_i").alias("i"),
+                F.col("_v").alias("v"),
             )
-            .groupBy("_g", "_i", "_v", "_rel")
-            .agg(F.max("_sim").alias("_maxsim"))
-        )
-        scored = sims.select(
+        ).over(w)
+        sim = F.round(cosine_fixed(F.col("_v"), F.col("_best.v")) * scale).cast("long")
+        state = state.withColumn("_best", best).select(
             "_g",
             "_i",
             "_v",
             "_rel",
-            (
-                F.lit(lam_num) * F.col("_rel")
-                - F.lit(lam_denom - lam_num) * F.col("_maxsim")
-            ).alias("_score"),
+            F.when(F.col("_best.open") & (F.col("_i") == F.col("_best.i")), F.lit(r))
+            .otherwise(F.col("rank"))
+            .alias("rank"),
+            F.when(F.col("_best.open"), F.greatest(F.col("_maxsim"), sim))
+            .otherwise(F.col("_maxsim"))
+            .alias("_maxsim"),
         )
-        nxt = (
-            scored.groupBy("_g")
-            .agg(
-                F.min(
-                    F.struct((-F.col("_score")).alias("s"), F.col("_i").alias("i"))
-                ).alias("_m")
-            )
-            .select("_g", F.col("_m.i").alias("_i"), F.lit(r).alias("rank"))
-            .join(scored.select("_g", "_i", "_v", "_rel"), ["_g", "_i"])
-        )
-        selected = selected.unionByName(nxt.select("_g", "_i", "_v", "_rel", "rank"))
+    selected = state.filter(F.col("rank").isNotNull())
     return selected.select(
         F.col("_g").alias(group_col),
         F.col("rank").cast("long").alias("rank"),

@@ -17,6 +17,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kgraph_spark.session import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
@@ -415,7 +417,7 @@ def pq_topk(
             StructField("_lut", ArrayType(ArrayType(DoubleType(), False), False), False),
         ]
     )
-    lut_df = codes.sparkSession.createDataFrame(lut_rows, lut_schema)
+    lut_df = local_frame(codes.sparkSession, lut_rows, lut_schema)
     # left-to-right term sum: identical IEEE association order to the LUT
     # builder and the SQL oracle's ordered list_sum
     dist = None
@@ -557,8 +559,8 @@ def blocked_pair_similarity(
     if dim is None:
         dim = _infer_dim(entities, vec_col)
         if dim is None:
-            return entities.sparkSession.createDataFrame(
-                [], "blk string, id_a string, id_b string, cosine double"
+            return local_frame(
+                entities.sparkSession, [], "blk string, id_a string, id_b string, cosine double"
             )
     # null embeddings would all hash to bucket 0 in every band (a null
     # projection falls through every sign test) — one mega-bucket and an

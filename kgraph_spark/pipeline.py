@@ -47,8 +47,8 @@ once:
     the merge map (mentions, both relation endpoints, presence) and the
     code dictionary (decode of both pair ends); each is one Spark job at
     most, and repeats within one plan reuse the first.
-With AQE off a warm refresh runs 14 Spark jobs at local[2] and 15 at
-local[8], where the merge-map collect takes one more take() round
+With AQE off a warm refresh runs 13 Spark jobs at local[2] and at
+local[8]; the merge-map collect is one of them at any partition count
 (tests/test_plan_budget.py pins the count and the per-table exchanges).
 """
 

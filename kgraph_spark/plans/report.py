@@ -1047,10 +1047,11 @@ def main() -> None:
     ))
 
     sections.append((
-        "MMR top-k — probes broadcast; per-round candidate joins are "
-        "group-keyed hash joins; argmax is min-of-struct aggregate",
+        "MMR top-k — probes broadcast; each round is one group window "
+        "over the per-candidate state (one shuffle on the group, no "
+        "per-round join or aggregate)",
         _plan(entrymod.queries()["mmr_topk"](spark, SF)),
-        ["HashAggregate", "!CartesianProduct"],
+        ["Window", "BroadcastHashJoin", "!SortMergeJoin", "!CartesianProduct"],
     ))
 
     sections.append((

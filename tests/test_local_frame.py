@@ -112,3 +112,98 @@ def test_merge_mapping_of_no_edges_is_empty_identity(spark):
     merged = canonicalize.apply_merge(df, mapping, "entity_id")
     assert merged.columns == df.columns
     assert sorted(merged.collect(), key=repr) == sorted(df.collect(), key=repr)
+
+
+def _bfs_nodes(spark):
+    from kgraph_spark.operators.graph import run_bfs_query
+
+    edges = local_frame(
+        spark, [("a", "rel", "b"), ("b", "rel", "c")], "subject_id string, predicate string, object_id string"
+    )
+    return run_bfs_query(edges, {"seeds": ["a"], "max_hops": 2})[0]
+
+
+def _pq_topk(spark):
+    from kgraph_spark.operators.similarity import pq_topk
+
+    codes = local_frame(spark, [(1, [0, 1]), (2, [1, 1])], "vec_id long, code array<int>")
+    probes = local_frame(spark, [(7, [0.0, 1.0])], "probe_id long, embedding array<double>")
+    codebooks = [[(0, [0.0]), (1, [1.0])], [(0, [0.0]), (1, [1.0])]]
+    return pq_topk(codes, probes, codebooks, k=1)
+
+
+def _no_vector_pairs(spark):
+    from kgraph_spark.operators.similarity import blocked_pair_similarity
+
+    ents = local_frame(
+        spark, [("e1", "drug", None)], "entity_id string, entity_type string, embedding array<float>"
+    )
+    return blocked_pair_similarity(ents, 0.9)
+
+
+def _rich_club(spark):
+    from kgraph_spark.operators.graph_analytics import rich_club
+
+    edges = local_frame(spark, [("a", "b"), ("a", "c")], "subject_id string, object_id string")
+    return rich_club(edges, k_grid=[1, 2])
+
+
+def _conflicts(spark):
+    from kgraph_spark.operators.relationships import conflicting_triples
+
+    triples = local_frame(
+        spark, [("s", "TREATS", "o"), ("s", "CAUSES", "o")], "subject_id string, predicate string, object_id string"
+    )
+    return conflicting_triples(triples, [("TREATS", "CAUSES")])
+
+
+def _entry_query(name):
+    def build(spark):
+        import __spark_entry__ as entrymod
+
+        return entrymod.queries()[name](spark, entrymod.SF_SMOKE)
+
+    return build
+
+
+# operators and entry queries that build a driver-side frame of their own,
+# with whether their plan is checked: run_bfs_query pins each hop, and
+# rdfs_entailment and temporal_reachability each round, with
+# localCheckpoint, whose plans also read as `Scan ExistingRDD`, so only
+# their parallelize calls are checked
+DRIVER_FRAMES = {
+    "run_bfs_query": (_bfs_nodes, False),
+    "pq_topk": (_pq_topk, True),
+    "blocked_pair_similarity_no_vectors": (_no_vector_pairs, True),
+    "rich_club": (_rich_club, True),
+    "conflicting_triples": (_conflicts, True),
+    "kg_rdfs_entailment": (_entry_query("kg_rdfs_entailment"), False),
+    "d12_tombstones": (_entry_query("d12_tombstones"), True),
+    "evt_hurst": (_entry_query("evt_hurst"), True),
+    "graph_temporal_reach": (_entry_query("graph_temporal_reach"), False),
+}
+
+
+@pytest.mark.parametrize("case", sorted(DRIVER_FRAMES))
+def test_operator_driver_frames_are_local_relations(spark, monkeypatch, case):
+    """The driver-side tables these operators build are LocalTableScans:
+    no Python RDD is parallelized and no `Scan ExistingRDD` is planned.
+    The plan is the check because tests/conftest.py hands pickled batches
+    to the JVM as they are, so the Python tasks such a scan costs outside
+    tests do not show here."""
+    build, plan_check = DRIVER_FRAMES[case]
+    parallelized = []
+    sc_type = type(spark.sparkContext)
+    parallelize = sc_type.parallelize
+
+    def spy(self, *args, **kwargs):
+        parallelized.append(args)
+        return parallelize(self, *args, **kwargs)
+
+    monkeypatch.setattr(sc_type, "parallelize", spy)
+    df = build(spark)
+    df.collect()
+    assert parallelized == []
+    if plan_check:
+        plan = _executed_plan(df)
+        assert "ExistingRDD" not in plan, plan

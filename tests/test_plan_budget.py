@@ -17,8 +17,10 @@ import time
 from collections import Counter
 
 import pytest
+from pyspark.sql import functions as F
 
 from kgraph_spark import synth
+from kgraph_spark.operators.canonicalize import merge_mapping
 from kgraph_spark.operators.export import write_bundle
 from kgraph_spark.operators.mentions import extract_all
 from kgraph_spark.pipeline import run_pipeline_from_extracted
@@ -26,10 +28,10 @@ from kgraph_spark.pipeline import run_pipeline_from_extracted
 # Spark jobs of one warm refresh at the test session's local[8] / 8 shuffle
 # partitions (22 before the shared intermediates were persisted and the
 # predicate spec inlined): the input's schema read, the merge-map collect
-# (an alias-index broadcast and three take() rounds over the 8 edge
-# partitions), then per table its broadcasts and its write job — entities
-# 2 + 1, relationships 4 + 1, mentions 1, evidence 1
-JOBS = 15
+# (an alias-index broadcast and one collect job), then per table its
+# broadcasts and its write job — entities 2 + 1, relationships 4 + 1,
+# mentions 1, evidence 1
+JOBS = 13
 # per table, outside the persisted subtrees: (extraction scans, broadcast
 # exchanges, shuffle exchanges)
 BUDGET = {
@@ -158,3 +160,43 @@ def test_no_plan_joins_the_predicate_spec(warm_refresh):
         _walk(plan, Counter(), Counter(), cached)
     for text in [plan.toString() for plan in plans.values()] + list(cached):
         assert "subject_types" not in text and "is_merge_signal" not in text, text
+
+
+@pytest.mark.parametrize("aqe", ["false", "true"])
+def test_same_as_edge_collect_is_one_job(spark, aqe):
+    """merge_mapping's driver probe collects a persisted 8-partition edge
+    frame in one Spark job, AQE on or off; a limit over the 8 partitions
+    ran a take() loop of one job per round (three here). With fewer edges
+    than the threshold the driver builds the map as a local relation, so
+    the probe is the only job; with more, the distributed loop gives the
+    same map."""
+    sc = spark.sparkContext
+    ids = F.col("id")
+    edges = (
+        spark.range(0, 40, numPartitions=8)
+        .filter(ids % 2 == 0)
+        .select(
+            F.format_string("prov-%02d", ids).alias("src"),
+            F.format_string("prov-%02d", ids + 1).alias("dst"),
+        )
+        .persist()
+    )
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, aqe)
+    try:
+        edges.count()
+        group = f"same-as-collect-{aqe}"
+        sc.setJobGroup(group, "SAME_AS edge collect")
+        try:
+            mapping = merge_mapping(edges)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert _settled_job_count(sc, group) == 1
+        local = sorted(tuple(r) for r in mapping.collect())
+        assert local == [(f"prov-{i + 1:02d}", f"prov-{i:02d}") for i in range(0, 40, 2)]
+        distributed = merge_mapping(edges, local_threshold=5)
+        assert sorted(tuple(r) for r in distributed.collect()) == local
+    finally:
+        spark.conf.set(key, before)
+        edges.unpersist()
