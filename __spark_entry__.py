@@ -4999,7 +4999,6 @@ def q_graph_temporal_reach(spark, sf_dir):
     than it arrived; pure integer min-folds, 4 pinned rounds; the
     oracle re-derives arrivals with a depth-bounded recursive CTE."""
     from kgraph_spark.operators.temporal import temporal_reachability
-    from kgraph_spark.session import local_frame
 
     docs = _read(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     d = F.col("doc_id")
@@ -5007,7 +5006,7 @@ def q_graph_temporal_reach(spark, sf_dir):
                      ((d % 7) * 3).alias("t"))
     e2 = docs.select(d.alias("src"), ((d + 11) % 50).alias("dst"),
                      ((d % 5) * 5 + 1).alias("t"))
-    seeds = local_frame(spark, [(0, 0), (25, 2)], "node long, t0 long")
+    seeds = spark.createDataFrame([(0, 0), (25, 2)], "node long, t0 long")
     return temporal_reachability(e1.unionByName(e2), seeds, max_hops=4)
 
 

@@ -23,8 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from kgraph_spark.session import local_frame
-
 _DEC = "decimal(38,0)"
 
 
@@ -809,7 +807,9 @@ def hurst_rs(
     fan-out is a literal-table broadcast; everything after is one
     (m, block) window + two hash aggregates.
     """
-    sizes_df = local_frame(series.sparkSession, [(int(m),) for m in sizes], "m long")
+    sizes_df = series.sparkSession.createDataFrame(
+        [(int(m),) for m in sizes], "m long"
+    )
     w = Window.orderBy(t_col)
     s = series.select(
         F.col(q_col).cast("long").alias("x"),

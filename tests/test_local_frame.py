@@ -168,9 +168,8 @@ def _entry_query(name):
 
 # operators and entry queries that build a driver-side frame of their own,
 # with whether their plan is checked: run_bfs_query pins each hop, and
-# rdfs_entailment and temporal_reachability each round, with
-# localCheckpoint, whose plans also read as `Scan ExistingRDD`, so only
-# their parallelize calls are checked
+# rdfs_entailment each round, with localCheckpoint, whose plans also read
+# as `Scan ExistingRDD`, so only their parallelize calls are checked
 DRIVER_FRAMES = {
     "run_bfs_query": (_bfs_nodes, False),
     "pq_topk": (_pq_topk, True),
@@ -179,8 +178,6 @@ DRIVER_FRAMES = {
     "conflicting_triples": (_conflicts, True),
     "kg_rdfs_entailment": (_entry_query("kg_rdfs_entailment"), False),
     "d12_tombstones": (_entry_query("d12_tombstones"), True),
-    "evt_hurst": (_entry_query("evt_hurst"), True),
-    "graph_temporal_reach": (_entry_query("graph_temporal_reach"), False),
 }
 
 

@@ -20,9 +20,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from kgraph_spark import synth
+from kgraph_spark.config import PipelineConfig
 from kgraph_spark.operators.canonicalize import merge_mapping
 from kgraph_spark.operators.export import write_bundle
 from kgraph_spark.operators.mentions import extract_all
+from kgraph_spark.operators.relationships import same_as_edges
 from kgraph_spark.pipeline import run_pipeline_from_extracted
 
 # Spark jobs of one warm refresh at the test session's local[8] / 8 shuffle
@@ -162,22 +164,25 @@ def test_no_plan_joins_the_predicate_spec(warm_refresh):
         assert "subject_types" not in text and "is_merge_signal" not in text, text
 
 
-@pytest.mark.parametrize("aqe", ["false", "true"])
-def test_same_as_edge_collect_is_one_job(spark, aqe):
-    """merge_mapping's driver probe collects a persisted 8-partition edge
-    frame in one Spark job, AQE on or off; a limit over the 8 partitions
-    ran a take() loop of one job per round (three here). With fewer edges
-    than the threshold the driver builds the map as a local relation, so
-    the probe is the only job; with more, the distributed loop gives the
-    same map."""
+@pytest.mark.parametrize("aqe, jobs", [("false", 1), ("true", 2)])
+def test_same_as_edge_collect_jobs(spark, aqe, jobs):
+    """merge_mapping's driver probe over same_as_edges (a distinct over 8
+    shuffle partitions of persisted relations) is one Spark job with AQE
+    off, where a limit over the 8 partitions ran a take() loop of one job
+    per round (three here); with AQE on the distinct's map stage is its
+    own job, so two. With fewer edges than the threshold the driver builds
+    the map as a local relation, so the probe is the only job; with more,
+    the distributed loop gives the same map."""
     sc = spark.sparkContext
     ids = F.col("id")
-    edges = (
+    resolved = (
         spark.range(0, 40, numPartitions=8)
         .filter(ids % 2 == 0)
         .select(
-            F.format_string("prov-%02d", ids).alias("src"),
-            F.format_string("prov-%02d", ids + 1).alias("dst"),
+            F.format_string("prov-%02d", ids).alias("subject_id"),
+            F.lit("same_as").alias("predicate"),
+            F.format_string("prov-%02d", ids + 1).alias("object_id"),
+            F.lit(0.9).alias("confidence"),
         )
         .persist()
     )
@@ -185,18 +190,19 @@ def test_same_as_edge_collect_is_one_job(spark, aqe):
     before = spark.conf.get(key)
     spark.conf.set(key, aqe)
     try:
-        edges.count()
+        resolved.count()
+        edges = same_as_edges(resolved, PipelineConfig())
         group = f"same-as-collect-{aqe}"
         sc.setJobGroup(group, "SAME_AS edge collect")
         try:
             mapping = merge_mapping(edges)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        assert _settled_job_count(sc, group) == 1
+        assert _settled_job_count(sc, group) == jobs
         local = sorted(tuple(r) for r in mapping.collect())
         assert local == [(f"prov-{i + 1:02d}", f"prov-{i:02d}") for i in range(0, 40, 2)]
         distributed = merge_mapping(edges, local_threshold=5)
         assert sorted(tuple(r) for r in distributed.collect()) == local
     finally:
         spark.conf.set(key, before)
-        edges.unpersist()
+        resolved.unpersist()
